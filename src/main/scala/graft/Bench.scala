@@ -227,7 +227,7 @@ object Bench {
     // Warm up JVM/JIT, whole-stage codegen and the parquet reader path once, so the
     // per-query numbers measure steady-state execution rather than first-job startup.
     spark.range(1L << 20).selectExpr("sum(id)").collect()
-    try SparkEntry.queries("q_dim_join")(spark, sfDir).count() catch { case _: Throwable => () }
+    SparkEntry.queries("q_dim_join")(spark, sfDir).count()
     // two unrecorded rounds: the first pays codegen compile, the second C2-tier JIT —
     // with one round the "before" sample measured warm-up, not machine load (observed
     // 0.17-0.21s before vs 0.08-0.12s after the sweep on a quiet box, tripping the

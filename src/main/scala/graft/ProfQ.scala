@@ -54,8 +54,6 @@ object ProfQ {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_SCANFLOOR")
-      .foreach(v => spark.conf.set("spark.graft.scanFloor.targetBytes", v))
     val listener = new Listener
     spark.sparkContext.addSparkListener(listener)
     spark.range(1L << 20).selectExpr("sum(id)").collect()

@@ -680,36 +680,6 @@ object TextExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  case class MinKHashes(child: Expression, k: Int)
-      extends UnaryExpression with CodegenFallback {
-    require(k > 0)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override protected def nullSafeEval(a: Any): Any = {
-      val arr = a.asInstanceOf[ArrayData]
-      // bounded max-heap of size k over hashes (scale path: O(n log k), no full sort)
-      val heap = new java.util.PriorityQueue[java.lang.Long](k, java.util.Collections.reverseOrder())
-      val seen = new java.util.HashSet[java.lang.Long]()
-      var j = 0
-      while (j < arr.numElements()) {
-        val s = arr.getUTF8String(j)
-        if (s != null) {
-          val h: java.lang.Long = hash(s, Seed1)
-          if (!seen.contains(h)) {
-            if (heap.size < k) { heap.add(h); seen.add(h) }
-            else if (h < heap.peek()) { seen.remove(heap.poll()); heap.add(h); seen.add(h) }
-          }
-        }
-        j += 1
-      }
-      val out = new Array[Long](heap.size)
-      var i = out.length - 1
-      while (i >= 0) { out(i) = heap.poll(); i -= 1 }
-      new GenericArrayData(out)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   /**
    * `jaro_winkler(a, b)` → DOUBLE in [0, 1]: Jaro similarity (Jaro 1989 — matches within
    * a window of ⌊max(|a|,|b|)/2⌋−1, half-counted transpositions) plus the Winkler prefix
@@ -901,7 +871,6 @@ object TextFunctions {
 
   def minhash(shingles: Column, k: Int): Column = column(MinHashSignature(expression(shingles), k))
   def simhash(toks: Column): Column             = column(SimHash64(expression(toks)))
-  def minKHashes(toks: Column, k: Int): Column  = column(MinKHashes(expression(toks), k))
 
   /** One-pass hashed shingles + consumers over pre-hashed arrays (the fast path). */
   def shingleHashes(toks: Column, n: Int): Column   = column(ShingleHashes(expression(toks), n))
@@ -922,17 +891,6 @@ object TextFunctions {
   def byteEntropySignals(text: Column): Column = column(ByteEntropySignals(expression(text)))
   def gearChunks(blob: Column, minLen: Int, maskBits: Int, maxLen: Int): Column =
     column(GearChunks(expression(blob), minLen, maskBits, maxLen))
-
-  /**
-   * LSH band hashes from a minhash signature: `bands` hashes, each over `rows = k/bands`
-   * consecutive signature values. Explode + groupBy band value = candidate buckets; the
-   * join key is `(bandIdx, bandHash)` so candidates only pair within a band — the standard
-   * MinHash-LSH candidate generation that avoids the O(n²) pairwise compare at scale.
-   */
-  def bandHashes(sig: Column, bands: Int, rows: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, array_join(transform(slice(sig, b * rows + lit(1), lit(rows)), _.cast(StringType)), ",")))
 
   /** Hamming distance between two 64-bit fingerprints (codegen'd built-ins). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

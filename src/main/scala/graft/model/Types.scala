@@ -29,7 +29,6 @@ object ConnectTypes {
     def isDate: Boolean      = name.exists(n => n == "io.debezium.time.Date" || n == "org.apache.kafka.connect.data.Date")
     def isTimestamp: Boolean = name.exists(n => n.endsWith(".time.Timestamp") || n == "org.apache.kafka.connect.data.Timestamp")
     def isZonedTs: Boolean   = name.exists(_.endsWith("ZonedTimestamp"))
-    def isInterval: Boolean  = name.exists(_.endsWith("Interval"))
     def isUuid: Boolean      = name.exists(_.endsWith("data.Uuid"))
     /** int64 micros (`interval.handling.mode=numeric`): golden rendering is the raw micros
       * long, avg month = 30.4375 d (all-datatypes golden `37091106000000`). */

@@ -15,15 +15,6 @@ import org.apache.spark.sql.types._
  */
 object MultimodalOps {
 
-  /** Metadata schema attached to every media blob. */
-  val MediaMetaSchema: StructType = StructType(Seq(
-    StructField("content_md5", StringType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("mime", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("n_frames", IntegerType, nullable = true)))
-
   /**
    * Content-defined chunk table over a binary column — FastCDC-style dedup at the
    * BYTE grain (Xia et al. 2016, USENIX ATC), the storage-side complement of the

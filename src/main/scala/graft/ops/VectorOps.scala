@@ -1688,28 +1688,6 @@ object VectorOps {
           .otherwise(col(vecCol)))
       .drop("__n")
 
-  /** Embedding-cosine near-duplicate pairs, blocked by a coarse LSH bucket so the pairwise
-    * compare runs per bucket, not over the full corpus square. */
-  def cosineNearDupPairs(
-      df: DataFrame,
-      threshold: Double,
-      nPlanes: Int = 4,
-      dim: Int = 64,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val planes = VectorFunctions.makePlanes(nPlanes, dim)
-    val withBucket = df.select(col(idCol), col(vecCol),
-      VectorFunctions.hyperplaneLsh(col(vecCol), planes).as("bucket"))
-    val a = withBucket.select(col("bucket"), col(idCol).as("id_a"), col(vecCol).as("vec_a"))
-      .repartition(col("bucket"))
-    val b = withBucket.select(col("bucket"), col(idCol).as("id_b"), col(vecCol).as("vec_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        VectorFunctions.cosine(col("vec_a"), col("vec_b")).as("sim"))
-      .filter(col("sim") >= threshold)
-  }
-
   /** Exact pairwise near-duplicates (no LSH recall loss), blocked on an equality column
     * (e.g. a partition/label/source key) to bound the pair explosion. */
   def cosineNearDupPairsExact(

@@ -215,27 +215,4 @@ object IngestDedup {
         applyBatch(batch, batchId, indexDir, outDir, textCol, idCol): Unit
       }
       .start()
-
-  /** Near-dup ingestion as a bounded streaming query (AvailableNow). */
-  def startNear(docs: DataFrame, indexDir: String, outDir: String, checkpointDir: String,
-      textCol: String = "text", idCol: String = "doc_id", threshold: Double = 0.4): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchNear(batch, batchId, indexDir, outDir, textCol, idCol, threshold): Unit
-      }
-      .start()
-
-  /** Span-dedup ingestion as a bounded streaming query (AvailableNow). */
-  def startSpan(docs: DataFrame, indexDir: String, outDir: String, checkpointDir: String,
-      textCol: String = "text", idCol: String = "doc_id", k: Int = 12,
-      maxSharedFrac: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchSpan(batch, batchId, indexDir, outDir, textCol, idCol, k, maxSharedFrac): Unit
-      }
-      .start()
 }

@@ -644,6 +644,12 @@ class VectorOpsSpec extends SparkSpec {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet,
       s"query/oracle key mismatch: ${(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet) ++
         (SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet)}")
+    // the maps are projections of the one spec registry, which refuses a repeated name
+    assert(SparkEntry.specs.size == SparkEntry.queries.size)
+    SparkEntry.specs.foreach(q => assert(SparkEntry.oracleSql(q.name) == q.oracle, q.name))
+    val spec = SparkEntry.specs.head
+    val dup = intercept[IllegalArgumentException](SparkEntry.registry(Seq(spec, spec)))
+    assert(dup.getMessage.contains(spec.name))
     // the pre-trained IVF probe returns the same neighbors as the in-query-trained gate
     // path (deterministic seeding => identical model => identical probe)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
