@@ -214,6 +214,98 @@ class StreamingSpec extends SparkSpec {
     assert(csv.exists(_.startsWith("1,2.5,u")))
   }
 
+  test("an all-null column in a drift batch keeps its type (inference drops all-null fields)") {
+    // Spark's JSON inference reads an all-null field as STRING; a batch that also adds a
+    // column used to widen the existing BIGINT `v` to STRING and retype its staged history
+    val base = Files.createTempDirectory("graft-allnull").toString
+    val spool = s"$base/spool"
+    writeSpool(spool, "000.jsonl", Seq(env("n.t", "c", """{"id":1,"v":1}""", null, 1)))
+    val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+      primaryKeys = Map("n_t" -> Seq("id")))
+    CdcRunner.run(spark, cfg)
+    writeSpool(spool, "001.jsonl", Seq(
+      env("n.t", "c", """{"id":2,"v":null,"extra":"x"}""", null, 2)))
+    CdcRunner.run(spark, cfg)
+    val staged = spark.read.option("mergeSchema", "true").parquet(s"$base/work/staging/n_t")
+    assert(staged.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(staged.schema("extra").dataType == org.apache.spark.sql.types.StringType)
+    val registry = Files.readString(Paths.get(s"$base/work/schemas.json"))
+    assert(registry.contains(""""name": "v", "type": "BIGINT""""), registry)
+  }
+
+  test("one micro-batch over three tables: inference, audit and widening stay per table") {
+    // A adds a column (inference), B's BIGINT `v` receives 2.5 (audit widens, retype),
+    // C's BIGINT `v` receives only integers — all three share the column name `v`
+    val base = Files.createTempDirectory("graft-pertable").toString
+    val spool = s"$base/spool"
+    val tables = Seq("m.a", "m.b", "m.c")
+    writeSpool(spool, "000.jsonl", tables.zipWithIndex.map { case (t, i) =>
+      env(t, "c", """{"z":"q","v":1,"id":1}""", null, i.toLong) })
+    val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+      primaryKeys = tables.map(t => t.replace('.', '_') -> Seq("id")).toMap)
+    CdcRunner.run(spark, cfg)
+    writeSpool(spool, "001.jsonl", Seq(
+      env("m.a", "c", """{"z":"r","v":2,"id":2,"w":"new"}""", null, 10),
+      env("m.b", "c", """{"z":"r","v":2.5,"id":2}""", null, 11),
+      env("m.c", "c", """{"z":"r","v":3,"id":2}""", null, 12)))
+    val r2 = CdcRunner.run(spark, cfg)
+    assert(r2.stats.batches == 1L, "the drift file must stage as ONE micro-batch")
+    assert(r2.tables == Map("m_a" -> 2L, "m_b" -> 2L, "m_c" -> 2L))
+    def staged(t: String) =
+      spark.read.option("mergeSchema", "true").parquet(s"$base/work/staging/$t")
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    assert(staged("m_a").schema("v").dataType == LongType)
+    assert(staged("m_b").schema("v").dataType == DoubleType)
+    assert(staged("m_c").schema("v").dataType == LongType)
+    assert(staged("m_b").count() == 2) // B's history retyped, nothing lost
+    // first-seen column order per table, not alphabetical
+    val payload = (t: String) =>
+      staged(t).columns.filterNot(graft.operators.Cdc.SystemCols.contains).toSeq
+    assert(payload("m_a") == Seq("z", "v", "id", "w"))
+    assert(payload("m_b") == Seq("z", "v", "id"))
+    assert(payload("m_c") == Seq("z", "v", "id"))
+    assert(readCsvDir(s"$base/out/tables/m_b.csv").exists(_.startsWith("r,2.5,2,")))
+  }
+
+  test("staging job count: a micro-batch adds one Spark job per extra table, nothing more") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val queryKey = "sql.streaming.queryId" // set on every job a streaming query runs
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val marker = "graft.test.jobcount"
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        Option(e.properties).flatMap(p => Option(p.getProperty(queryKey)))
+          .foreach(q => jobs.merge(q, 1, (a, b) => a + b))
+        if (Option(e.properties).exists(_.getProperty(marker) != null)) drained = true
+      }
+    }
+    def stagingJobs(nTables: Int): Int = {
+      val base = Files.createTempDirectory("graft-jobs").toString
+      writeSpool(s"$base/spool", "000.jsonl", for (t <- 0 until nTables; id <- 1 to 3)
+        yield env(s"j.t$t", "c", s"""{"id":$id,"v":"x$id","n":$id}""", null, id.toLong))
+      jobs.clear(); drained = false
+      CdcRunner.run(spark, RunConfig(spoolDir = s"$base/spool", workDir = s"$base/work",
+        outDir = s"$base/out"))
+      // the listener bus is async: a marker job queued after the run drains it
+      spark.sparkContext.setLocalProperty(marker, "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!drained && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(drained && jobs.size == 1, s"expected one streaming query's jobs, saw $jobs")
+      jobs.values.asScala.head.intValue
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val one = stagingJobs(1)
+      val four = stagingJobs(4)
+      // the appends run on pool threads; they must still count as the query's jobs
+      assert(four >= 4, s"4-table batch ran $four streaming jobs, fewer than its appends")
+      assert(four - one <= 3, s"1 table: $one jobs, 4 tables: $four — more than 3 extra appends")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("decimal-as-string payloads keep their exact rendering (no numeric coercion)") {
     // decimal.handling.mode=string contract (§1.3): "708.00000" is a JSON string and must
     // export byte-identically, not as 708.0
