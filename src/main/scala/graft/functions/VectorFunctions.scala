@@ -448,7 +448,7 @@ object VectorExpressions {
            |long[] $y = $b.toLongArray();
            |if ($x.length != $y.length) throw new IllegalArgumentException(
            |  "hamming_sim: signature widths differ (" + $x.length + " vs " + $y.length +
-           |  " words) — signatures at mixed bit budgets cannot be Hamming-compared");
+           |  " words) - signatures at mixed bit budgets cannot be Hamming-compared");
            |int $acc = 0;
            |for (int $i = 0; $i < $x.length; $i++) { $acc += java.lang.Long.bitCount($x[$i] ^ $y[$i]); }
            |${ev.value} = (double) ($bits - $acc);

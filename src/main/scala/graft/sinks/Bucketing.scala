@@ -2,7 +2,6 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /**
  * Bucketed-table sink for co-located joins: write both sides of a recurring big join
@@ -14,9 +13,10 @@ import org.apache.spark.sql.types.StructType
  * The incremental-admission pattern ([[graft.streaming.IngestDedup]]) APPENDS to its
  * index every batch, so a long-lived index accretes one small file set per batch — the
  * classic small-file problem (100k batches × 32 tasks = 3.2M files; the namenode and
- * every scan's task-planning pay for each). [[compactBucketed]] / [[compactIndexDir]]
- * are the maintenance rewrite: same rows, same layout contract, target-sized files
- * (VERDICT r6 #7).
+ * every scan's task-planning pay for each). [[compactBucketed]] is the maintenance
+ * rewrite for bucketed tables (same rows, same layout contract, target-sized files,
+ * VERDICT r6 #7); a plain index directory compacts through
+ * [[graft.streaming.BatchState.compactLog]].
  */
 object Bucketing {
 
@@ -89,47 +89,5 @@ object Bucketing {
       s"""CREATE TABLE $name ($schemaDdl) USING PARQUET
          |CLUSTERED BY ($keyList) SORTED BY ($keyList) INTO $buckets BUCKETS
          |LOCATION '$path'""".stripMargin)
-  }
-
-  /**
-   * Compact a plain parquet index directory (the [[graft.streaming.IngestDedup]]
-   * layout: per-batch appended part files + `_batch_<id>` marker files) down to
-   * ⌈totalBytes / targetFileBytes⌉ files. Marker files and dot/underscore metadata are
-   * untouched — admission bookkeeping survives the rewrite, and because every reader
-   * supplies an explicit schema and the probe is a join, neither file names nor row
-   * order carry meaning. Returns the number of data files after compaction.
-   *
-   * Ordering is read → write tmp (under `_compact_tmp`, invisible to parquet readers)
-   * → delete old → move in: a crash before the delete leaves the index intact; a crash
-   * between delete and move leaves the full compacted copy in `_compact_tmp` for
-   * manual restore (documented non-atomicity — same caveat as [[compactBucketed]]).
-   */
-  def compactIndexDir(spark: SparkSession, dir: String, schema: StructType,
-      targetFileBytes: Long = 128L << 20): Int = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    def dataFiles() = fs.listStatus(p).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    val before = dataFiles()
-    if (before.length <= 1) return before.length
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tmp = new Path(p, "_compact_tmp")
-    fs.delete(tmp, true)
-    spark.read.schema(schema).parquet(dir)
-      .repartition(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    before.foreach(s => fs.delete(s.getPath, false))
-    val moved = fs.listStatus(tmp)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .zipWithIndex
-    moved.foreach { case (s, i) =>
-      fs.rename(s.getPath, new Path(p, s"compact-$i-${s.getPath.getName}"))
-    }
-    fs.delete(tmp, true)
-    moved.length
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Grain-adaptive GROUPING SETS summary store (VERDICT r12 stretch #7): starts as
@@ -93,17 +92,4 @@ object AdaptiveGroupingSetsMv {
     if (BucketedGroupingSetsMv.hasState(spark, bktDir(stateDir)))
       BucketedGroupingSetsMv.current(spark, bktDir(stateDir))
     else GroupingSetsMv.current(spark, flatDir(stateDir))
-
-  /** Wire into a bounded streaming query (AvailableNow, the IngestDedup pattern). */
-  def start(stream: DataFrame, stateDir: String, checkpointDir: String,
-      d1: String, d2: String, measure: String,
-      nBuckets: Int = 0, grainThreshold: Long = 100000L): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, stateDir, d1, d2, measure,
-          nBuckets, grainThreshold): Unit
-      }
-      .start()
 }

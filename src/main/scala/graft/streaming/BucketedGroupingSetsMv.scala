@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
 /**
@@ -42,22 +41,9 @@ import org.apache.spark.sql.types.DecimalType
  */
 object BucketedGroupingSetsMv {
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committedIds(fs: FileSystem, dir: String, prefix: String): Seq[Long] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith(prefix) &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix(prefix).toLong)
-      .toSeq.sorted
-  }
-
   /** Committed snapshots: a snapshot exists once `s=<id>/_SUCCESS` lands. */
-  private def snapshots(fs: FileSystem, stateDir: String): Seq[Long] =
-    committedIds(fs, stateDir, "s=")
+  private def snapshots(fs: FileSystem, stateDir: String, retain: Int = 2) =
+    new BatchState.Versions(fs, stateDir, "s=", retain = retain)
 
   private def readManifest(fs: FileSystem, stateDir: String, snap: Long): Map[Int, Long] = {
     val in = fs.open(new Path(s"$stateDir/s=$snap/manifest"))
@@ -103,26 +89,16 @@ object BucketedGroupingSetsMv {
     * grouping key across an old-hash clean bucket and a new-hash dirty bucket, and
     * `current()` (a plain union, no re-aggregation) would report the key twice with
     * nothing failing. So the FIRST batch writes `nBuckets` + the hash spec into a
-    * meta file, and every later batch refuses loudly on mismatch — the same
-    * fail-loudly discipline as the checkpoint-reset guard. */
-  private def checkOrWriteMeta(fs: FileSystem, stateDir: String,
+    * meta file, and every later batch refuses loudly on mismatch. */
+  private def checkMeta(fs: FileSystem, stateDir: String,
       nBuckets: Int, d1: String, d2: String): Unit = {
-    val p = new Path(s"$stateDir/meta")
     val want = s"nBuckets=$nBuckets\nhash=${hashSpec(d1, d2)}\n"
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val got = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      if (got != want) throw new IllegalStateException(
-        s"bucketed summary state at $stateDir was created with [${got.trim
-          .replace("\n", ", ")}] but this run supplies [${want.trim.replace("\n", ", ")}]: " +
-          "bucket assignment is a pure function of these parameters, so continuing " +
-          "would split grouping keys across old-hash and new-hash buckets and " +
-          "double-report them — rebuild the state dir or restore the original parameters")
-    } else {
-      fs.mkdirs(new Path(stateDir))
-      val out = fs.create(p, true)
-      out.write(want.getBytes("UTF-8"))
-      out.close()
+    BatchState.checkOrWriteMeta(fs, stateDir, want) { got =>
+      s"bucketed summary state at $stateDir was created with [${got.trim
+        .replace("\n", ", ")}] but this run supplies [${want.trim.replace("\n", ", ")}]: " +
+        "bucket assignment is a pure function of these parameters, so continuing " +
+        "would split grouping keys across old-hash and new-hash buckets and " +
+        "double-report them — rebuild the state dir or restore the original parameters"
     }
   }
 
@@ -130,19 +106,12 @@ object BucketedGroupingSetsMv {
     * lets [[AdaptiveGroupingSetsMv]] resume a store without the caller having to
     * remember the auto-selected modulus. */
   private[streaming] def committedBuckets(spark: SparkSession, stateDir: String): Option[Int] =
-    metaBuckets(fsOf(spark, stateDir), stateDir)
+    metaBuckets(BatchState.fsOf(spark, stateDir), stateDir)
 
-  private def metaBuckets(fs: FileSystem, stateDir: String): Option[Int] = {
-    val p = new Path(s"$stateDir/meta")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      txt.linesIterator.collectFirst {
-        case l if l.startsWith("nBuckets=") => l.stripPrefix("nBuckets=").toInt
-      }
-    }
-  }
+  private def metaBuckets(fs: FileSystem, stateDir: String): Option[Int] =
+    BatchState.meta(fs, stateDir).flatMap(_.linesIterator.collectFirst {
+      case l if l.startsWith("nBuckets=") => l.stripPrefix("nBuckets=").toInt
+    })
 
   /** Apply one micro-batch: aggregate the batch through the grouping-sets lattice,
     * merge into ONLY the buckets the delta touches, commit a new snapshot manifest
@@ -152,22 +121,13 @@ object BucketedGroupingSetsMv {
       d1: String, d2: String, measure: String,
       nBuckets: Int = 16, retain: Int = 2): Int = {
     require(nBuckets > 0)
-    // replay safety depends on the predecessor snapshot surviving the prune: with
-    // retain=1, a crash-replay of batch b finds no committed snapshot < b and would
-    // merge its delta against nothing — refuse the misconfiguration up front
-    require(retain >= 2, s"retain must be >= 2 for at-least-once replay safety (got $retain)")
     val spark = batch.sparkSession
-    val fs = fsOf(spark, stateDir)
-    checkOrWriteMeta(fs, stateDir, nBuckets, d1, d2)
-    val snaps = snapshots(fs, stateDir)
-    snaps.lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"bucketed summary state at $stateDir has applied batch_id $m > incoming " +
-          s"$batchId: the stream's checkpoint was reset independently of the state " +
-          "dir — restore the checkpoint or start a fresh state dir")
-    }
-    val priorSnap = snaps.filter(_ < batchId).lastOption
-    val priorManifest = priorSnap.map(readManifest(fs, stateDir, _)).getOrElse(Map.empty)
+    val fs = BatchState.fsOf(spark, stateDir)
+    val snaps = snapshots(fs, stateDir, retain)
+    checkMeta(fs, stateDir, nBuckets, d1, d2)
+    snaps.guard("bucketed summary state", batchId)
+    val priorManifest = snaps.prior(batchId).map(readManifest(fs, stateDir, _))
+      .getOrElse(Map.empty)
 
     val delta = GroupingSetsMv.batchSummary(batch, d1, d2, measure)
       .withColumn("b", bucketCol(d1, d2, nBuckets))
@@ -208,7 +168,7 @@ object BucketedGroupingSetsMv {
   /** Whether the store holds any committed snapshot — the mode probe of
     * [[AdaptiveGroupingSetsMv]]. */
   private[streaming] def hasState(spark: SparkSession, stateDir: String): Boolean =
-    snapshots(fsOf(spark, stateDir), stateDir).nonEmpty
+    snapshots(BatchState.fsOf(spark, stateDir), stateDir).newest.nonEmpty
 
   /** Seed the store from an ALREADY-AGGREGATED summary (the flat store's committed
     * state) as a committed snapshot at `batchId` — the migration half-step of
@@ -220,12 +180,9 @@ object BucketedGroupingSetsMv {
       stateDir: String, d1: String, d2: String, nBuckets: Int): Unit = {
     require(nBuckets > 0)
     val spark = summary.sparkSession
-    val fs = fsOf(spark, stateDir)
-    checkOrWriteMeta(fs, stateDir, nBuckets, d1, d2)
-    snapshots(fs, stateDir).lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"cannot seed $stateDir at batch $batchId: it already has snapshot $m")
-    }
+    val fs = BatchState.fsOf(spark, stateDir)
+    checkMeta(fs, stateDir, nBuckets, d1, d2)
+    snapshots(fs, stateDir).guard("bucketed summary state", batchId)
     summary.withColumn("b", bucketCol(d1, d2, nBuckets))
       .repartition(nBuckets, col("b")) // ~one file per bucket (see applyBatch)
       .write.mode("overwrite").partitionBy("b").parquet(s"$stateDir/w=$batchId")
@@ -239,7 +196,7 @@ object BucketedGroupingSetsMv {
     * them and every `w=` dir no retained manifest references (which also sweeps
     * uncommitted junk left by crashes — an uncommitted dir is unreferencable). */
   private def prune(fs: FileSystem, stateDir: String, retain: Int): Unit = {
-    val keepSnaps = snapshots(fs, stateDir).takeRight(retain)
+    val keepSnaps = snapshots(fs, stateDir).committed.takeRight(retain)
     val referenced = keepSnaps.flatMap(readManifest(fs, stateDir, _).values).toSet
     val keepS = keepSnaps.map(v => s"s=$v").toSet
     fs.listStatus(new Path(stateDir)).foreach { st =>
@@ -253,8 +210,8 @@ object BucketedGroupingSetsMv {
   /** The maintained summary at the newest committed snapshot: union of every bucket
     * at its manifest-pinned version, with the flat store's read-time finalization. */
   def current(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = fsOf(spark, stateDir)
-    val snap = snapshots(fs, stateDir).lastOption.getOrElse(
+    val fs = BatchState.fsOf(spark, stateDir)
+    val snap = snapshots(fs, stateDir).newest.getOrElse(
       throw new IllegalStateException(s"no maintained summary at $stateDir"))
     val manifest = readManifest(fs, stateDir, snap)
     require(manifest.nonEmpty, s"snapshot s=$snap at $stateDir is empty")
@@ -272,15 +229,4 @@ object BucketedGroupingSetsMv {
     spark.read.parquet(paths: _*)
       .withColumn("avg", round(col("s").cast("double") / col("n"), 6))
   }
-
-  /** Wire into a bounded streaming query (AvailableNow, the IngestDedup pattern). */
-  def start(stream: DataFrame, stateDir: String, checkpointDir: String,
-      d1: String, d2: String, measure: String, nBuckets: Int = 16): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, stateDir, d1, d2, measure, nBuckets): Unit
-      }
-      .start()
 }

@@ -193,55 +193,57 @@ object CdcRunner {
     // the signal table must flow through the stream even under an include filter
     val includeWithSignals = cfg.includeTables.map(ts => ts ++ cfg.signalTable)
     spark.streams.addListener(stats) // D8: progress/record bookkeeping via listener
+    // removed on every exit: a foreachBatch failure rethrown by awaitTermination must
+    // not leave the listener registered on the session
+    try {
+      val reader = spark.readStream.format("graft.sources.CdcSpoolSource")
+        .option("path", cfg.spoolDir)
+      cfg.maxBytesPerTrigger.foreach(m => reader.option("maxBytesPerTrigger", m.toString))
+      cfg.stopAtPos.foreach(p => reader.option("stopAtPos", p.toString))
+      cfg.stopAtFile.foreach(f => reader.option("stopAtFile", f))
+      val stream = reader.load()
 
-    val reader = spark.readStream.format("graft.sources.CdcSpoolSource")
-      .option("path", cfg.spoolDir)
-    cfg.maxBytesPerTrigger.foreach(m => reader.option("maxBytesPerTrigger", m.toString))
-    cfg.stopAtPos.foreach(p => reader.option("stopAtPos", p.toString))
-    cfg.stopAtFile.foreach(f => reader.option("stopAtFile", f))
-    val stream = reader.load()
-
-    val trigger =
-      if (cfg.maxWaitMs.isDefined) Trigger.ProcessingTime(100) else Trigger.AvailableNow()
-    val query = stream.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"${cfg.workDir}/checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (cfg.wireFormat) stageWireEvents(spark, batch, stagingRoot, includeWithSignals,
-          filtersOf(cfg))
-        else stageEvents(spark, batch, stagingRoot, registry, only = includeWithSignals,
-          filtersOf(cfg))
-      }
-      .start()
-    cfg.maxWaitMs match {
-      case Some(wait) =>
-        // reference control loop (`AbstractDebeziumTask.java:166-189`): poll every 500 ms;
-        // stop when idle > maxWait AND no snapshot is in progress; max duration still caps
-        // the whole run. Stops are taken at trigger boundaries, not mid-batch.
-        val deadline = cfg.maxDurationMs.map(System.currentTimeMillis() + _)
-        var running = query.isActive
-        while (running) {
-          query.awaitTermination(500)
-          running = query.isActive
-          if (running) {
-            val idleMs = System.currentTimeMillis() - stats.snapshot.lastEventMs
-            val timedOut = deadline.exists(System.currentTimeMillis() >= _)
-            val idleStop = idleMs > wait && !stats.snapshotInProgress &&
-              !query.status.isTriggerActive
-            if (timedOut || idleStop) { query.stop(); running = false }
+      val trigger =
+        if (cfg.maxWaitMs.isDefined) Trigger.ProcessingTime(100) else Trigger.AvailableNow()
+      val query = stream.writeStream
+        .trigger(trigger)
+        .option("checkpointLocation", s"${cfg.workDir}/checkpoint")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          if (cfg.wireFormat) stageWireEvents(spark, batch, stagingRoot, includeWithSignals,
+            filtersOf(cfg))
+          else stageEvents(spark, batch, stagingRoot, registry, only = includeWithSignals,
+            filtersOf(cfg))
+        }
+        .start()
+      cfg.maxWaitMs match {
+        case Some(wait) =>
+          // reference control loop (`AbstractDebeziumTask.java:166-189`): poll every 500 ms;
+          // stop when idle > maxWait AND no snapshot is in progress; max duration still caps
+          // the whole run. Stops are taken at trigger boundaries, not mid-batch.
+          val deadline = cfg.maxDurationMs.map(System.currentTimeMillis() + _)
+          var running = query.isActive
+          while (running) {
+            query.awaitTermination(500)
+            running = query.isActive
+            if (running) {
+              val idleMs = System.currentTimeMillis() - stats.snapshot.lastEventMs
+              val timedOut = deadline.exists(System.currentTimeMillis() >= _)
+              val idleStop = idleMs > wait && !stats.snapshotInProgress &&
+                !query.status.isTriggerActive
+              if (timedOut || idleStop) { query.stop(); running = false }
+            }
           }
-        }
-      case None =>
-        cfg.maxDurationMs match {
-          case Some(ms) => if (!query.awaitTermination(ms)) query.stop()
-          case None     => query.awaitTermination()
-        }
-    }
-    // progress events arrive on an async listener bus; give the final batch's event a moment
-    val deadline = System.currentTimeMillis() + 2000
-    while (stats.snapshot.processing && System.currentTimeMillis() < deadline)
-      Thread.sleep(20)
-    spark.streams.removeListener(stats)
+        case None =>
+          cfg.maxDurationMs match {
+            case Some(ms) => if (!query.awaitTermination(ms)) query.stop()
+            case None     => query.awaitTermination()
+          }
+      }
+      // progress events arrive on an async listener bus; give the final batch's event a moment
+      val deadline = System.currentTimeMillis() + 2000
+      while (stats.snapshot.processing && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    } finally spark.streams.removeListener(stats)
 
     // S5: blocking-snapshot signals from every channel — config-driven table additions,
     // the file signal channel, and execute-snapshot rows that arrived through the stream

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /**
@@ -16,13 +14,9 @@ import org.apache.spark.sql.types._
  * chunk-grain dedup is a STORAGE saving (a blob's recipe references mostly
  * already-stored chunks), so the maintained quantity is the unique-chunk census.
  *
- * Replay/crash discipline = the IngestDedup idiom verbatim: `_batch_<id>` marker
- * files beside the data gate idempotent re-application (a replayed batch re-probes
- * the SAME prior index — `batch_id =!= incoming` filters its own half-written
- * append), a LOWER incoming id than the recorded max means the stream's checkpoint
- * was reset against a surviving store and fails loudly, and the store auto-compacts
- * through [[graft.sinks.Bucketing.compactIndexDir]]'s read → tmp → atomic-swap once
- * per-batch appends accumulate.
+ * Replay/crash discipline is the [[BatchState]] append log, as in IngestDedup: a
+ * replayed batch re-probes the SAME prior store, a reset checkpoint fails loudly, and
+ * the store auto-compacts through [[BatchState.compactLog]] past a file-count trip.
  *
  * 100 TB shape: the store is (hash, len) pairs — ~16 bytes per UNIQUE chunk, the
  * natural bucketing key is `chunk_hash`, and the per-batch anti-join shuffles only
@@ -37,37 +31,15 @@ object ChunkStore {
 
   val DefaultAutoCompactFiles = 24
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readStore(spark: SparkSession, dir: String): DataFrame =
-    if (fsOf(spark, dir).exists(new Path(dir))) spark.read.schema(Schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schema)
-
-  private def recordedMax(spark: SparkSession, dir: String): Option[Long] = {
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(new Path(dir))) None
-    else fs.listStatus(new Path(dir)).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_batch_") => n.stripPrefix("_batch_").toLong }
-      .maxOption
-  }
-
   /** Apply one micro-batch of (idCol, binCol) rows; returns the novel-chunk count. */
   def applyBatch(batch: DataFrame, batchId: Long, storeDir: String,
       binCol: String = "blob", idCol: String = "id",
       minLen: Int = 16, maskBits: Int = 4, maxLen: Int = 128,
       autoCompactFiles: Int = DefaultAutoCompactFiles): Long = {
     val spark = batch.sparkSession
-    recordedMax(spark, storeDir).filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"chunk store at $storeDir has applied batch_id $m > incoming $batchId: the " +
-          "stream's checkpoint was reset independently of the store — restore the " +
-          "checkpoint or start a fresh store")
-    }
-    // a replayed batch must not probe its own (possibly partial) prior append;
-    // NULL batch_id rows (external backfill) still reject duplicates
-    val prior = readStore(spark, storeDir)
-      .filter(col("batch_id").isNull || col("batch_id") =!= lit(batchId))
+    val fs = BatchState.fsOf(spark, storeDir)
+    BatchState.guard("chunk store", storeDir, BatchState.applied(fs, storeDir), batchId)
+    val prior = BatchState.prior(spark, storeDir, Schema, batchId)
       .select(col("chunk_hash"), col("len"))
     val chunks = graft.ops.MultimodalOps
       .cdcChunks(batch, binCol, idCol, minLen, maskBits, maxLen)
@@ -79,15 +51,9 @@ object ChunkStore {
       // ones per batch (the IngestDedup coalesce(1) rationale)
       novel.withColumn("batch_id", lit(batchId))
         .coalesce(1).write.mode("append").parquet(storeDir)
-      val fs = fsOf(spark, storeDir)
-      fs.create(new Path(storeDir, s"_batch_$batchId"), true).close()
+      BatchState.mark(fs, storeDir, batchId)
       val n = novel.count()
-      val nData = fs.listStatus(new Path(storeDir)).count { s =>
-        val nm = s.getPath.getName
-        s.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-      }
-      if (nData > autoCompactFiles)
-        graft.sinks.Bucketing.compactIndexDir(spark, storeDir, Schema): Unit
+      BatchState.maybeCompact(spark, storeDir, Schema, autoCompactFiles)
       n
     } finally novel.unpersist(): Unit
   }
@@ -96,17 +62,6 @@ object ChunkStore {
     * row per unique (hash, len) by construction, but the census still counts
     * DISTINCT so an external backfill append can never inflate it. */
   def census(spark: SparkSession, storeDir: String): DataFrame =
-    readStore(spark, storeDir).select(col("chunk_hash"), col("len")).distinct()
+    BatchState.read(spark, storeDir, Schema).select(col("chunk_hash"), col("len")).distinct()
       .agg(count(lit(1)).as("n_chunks"), sum(col("len").cast("long")).as("uniq_bytes"))
-
-  /** Wire into a bounded streaming query (AvailableNow, the IngestDedup pattern). */
-  def start(blobs: DataFrame, storeDir: String, checkpointDir: String,
-      binCol: String = "blob", idCol: String = "id"): StreamingQuery =
-    blobs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, storeDir, binCol, idCol): Unit
-      }
-      .start()
 }

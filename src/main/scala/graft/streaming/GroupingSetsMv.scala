@@ -20,12 +20,9 @@ import org.apache.spark.sql.types.DecimalType
  * grain-bounded (|dim1| + |dim2| + 1 rows), never corpus-sized.
  *
  * Replay safety (foreachBatch is at-least-once) is by STATE VERSIONING, not
- * coordination — the IngestDedup idiom adapted to a merge that is NOT idempotent by
- * itself (summing the same delta twice double-counts): batch b reads the newest
- * version < b, merges, and overwrites `v=<b>`. A crash-replay of batch b re-reads the
- * SAME predecessor version — its own half-written output can never feed its merge —
- * recomputes the same merge, and the overwrite converges. Versions older than
- * `retain` are pruned after a successful write (the newest version always survives).
+ * coordination, because the merge is NOT idempotent by itself (summing the same delta
+ * twice double-counts): the [[BatchState.Versions]] protocol — merge the newest
+ * committed `v=` below b, overwrite `v=<b>`, prune to `retain`.
  *
  * Scale: the per-batch Expand is 3× the BATCH (not the corpus), the merge joins a
  * grain-bounded state table, and the rewrite cost is O(grain) per batch. At 100 TB
@@ -57,138 +54,85 @@ object GroupingSetsMv {
       .agg(sum(col("n")).cast("long").as("n"),
         sum(col("s")).cast(DecimalType(38, 2)).as("s"))
 
-  /** COMMITTED versions only: a version exists once its Spark `_SUCCESS` marker
-    * lands. A crash mid-overwrite (parquet overwrite deletes the dir content before
-    * the new commit) leaves a junk `v=` dir with no marker — without the gate,
-    * `current()` would read a half-written (possibly EMPTY) summary as the newest
-    * version, and the prior-selection/reset-guard would trust it too. */
-  private def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith("v=") &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .toSeq.sorted
-  }
+  private def layout(spark: SparkSession, stateDir: String, retain: Int = 2) =
+    new BatchState.Versions(BatchState.fsOf(spark, stateDir), stateDir, "v=", retain = retain)
 
   /** Read one committed version dir, finishing any interrupted in-place compaction
-    * first (the [[graft.streaming.IncrementalDecontaminate]] read discipline —
-    * without it, a crash mid-swap would surface a half-compacted summary). */
-  private def readVersion(spark: SparkSession, stateDir: String, v: Long): DataFrame = {
-    val p = new Path(s"$stateDir/v=$v")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sinks.AtomicSwap.finishSwap(fs, p)
-    spark.read.parquet(p.toString)
+    * first — without it, a crash mid-swap would surface a half-compacted summary. */
+  private def readVersion(spark: SparkSession, dir: String): DataFrame = {
+    graft.sinks.AtomicSwap.finishSwap(BatchState.fsOf(spark, dir), new Path(dir))
+    spark.read.parquet(dir)
   }
 
-  /**
-   * In-place compaction of the NEWEST committed version dir (crash-safe via the
-   * [[graft.sinks.AtomicSwap]] manifest swap — rename-first, recoverable from every
-   * crash point on the next read). The merge write shuffles on the grouping key, so a
-   * grain-bounded summary still lands as one near-empty part file per shuffle
-   * partition; long-running maintenance compacts the current version down to one
-   * file without touching version bookkeeping (`_SUCCESS` and the prune protocol see
-   * only data-file names change). Returns the data-file count after compaction.
-   */
   /** Compaction trips only when the state's files are actually SMALL (avg below
     * this), and rewrites to ~`TargetFileBytes` files — never a single-threaded
     * full rewrite of a healthy big state. */
   private[streaming] val SmallFileBytes: Long = 4L << 20
   private[streaming] val TargetFileBytes: Long = 32L << 20
 
+  /**
+   * In-place compaction of the NEWEST committed version dir through
+   * [[BatchState.rewrite]]. The merge write shuffles on the grouping key, so a
+   * grain-bounded summary still lands as one near-empty part file per shuffle
+   * partition; long-running maintenance compacts the current version without touching
+   * version bookkeeping (`_SUCCESS` and the prune see only data-file names change).
+   * Returns the data-file count after compaction.
+   */
   def compactState(spark: SparkSession, stateDir: String): Int = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(return 0)
-    val p = new Path(s"$stateDir/v=$v")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sinks.AtomicSwap.finishSwap(fs, p)
-    val data = graft.sinks.AtomicSwap.dataFileNames(fs, p)
-    if (data.length <= 1) return data.length
-    val totalBytes = data.map(n => fs.getFileStatus(new Path(p, n)).getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / TargetFileBytes).toInt)
-    val snapshot = spark.read.parquet(p.toString).localCheckpoint(eager = true)
-    val tmp = new Path(p, graft.sinks.AtomicSwap.TmpName)
-    fs.delete(tmp, true)
-    snapshot.coalesce(nOut).write.mode("overwrite").parquet(tmp.toString)
-    graft.sinks.AtomicSwap.commitSwap(fs, p)
-    graft.sinks.AtomicSwap.dataFileNames(fs, p).length
+    val vs = layout(spark, stateDir)
+    val dir = vs.path(vs.newest.getOrElse(return 0))
+    val data = readVersion(spark, dir)
+    val n = graft.sinks.AtomicSwap.dataFileNames(BatchState.fsOf(spark, dir), new Path(dir)).length
+    if (n <= 1) n else BatchState.rewrite(spark, dir, data, TargetFileBytes)
   }
 
   /** Newest committed version id + its summary frame — the migration read of
     * [[AdaptiveGroupingSetsMv]] (None when the store has no committed state). */
   private[streaming] def committedState(spark: SparkSession, stateDir: String,
-      below: Long = Long.MaxValue): Option[(Long, DataFrame)] =
-    versions(spark, stateDir).filter(_ < below).lastOption
-      .map(v => v -> readVersion(spark, stateDir, v))
+      below: Long = Long.MaxValue): Option[(Long, DataFrame)] = {
+    val vs = layout(spark, stateDir)
+    vs.prior(below).map(v => v -> readVersion(spark, vs.path(v)))
+  }
 
-  /** Apply one micro-batch: read newest version < batchId, merge, overwrite
-    * `v=<batchId>`, prune. Returns the maintained summary row count.
-    *
-    * Checkpoint-reset guard (the IncrementalCC `_batch_` idiom, expressed through the
-    * version directory itself — the newest version always survives pruning, so
-    * max(version) IS the max applied batch): an incoming batchId BELOW it means the
-    * stream's checkpoint was reset against a surviving state dir. Without the guard,
-    * batch 0 would merge against no prior (filter `_ < 0`), write v=0, and the prune
-    * would immediately delete it (dropRight keeps the numerically largest versions) —
-    * the batch's data silently dropped and later batches double-counting old state.
-    * batchId == max(version) is a legitimate crash-replay (it re-reads the same
-    * predecessor and overwrites convergently). */
+  /** Apply one micro-batch through the [[BatchState.Versions]] protocol: guard, merge
+    * the newest version < batchId, overwrite `v=<batchId>`, prune. Returns the
+    * maintained summary row count. */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
       d1: String, d2: String, measure: String, retain: Int = 2,
       autoCompactFiles: Int = 16): Long = {
-    // replay safety depends on the PREDECESSOR version surviving the prune: with
-    // retain=1, a crash-replay of batch b finds no committed version < b and would
-    // commit a delta-only summary — refuse the misconfiguration up front
-    require(retain >= 2, s"retain must be >= 2 for at-least-once replay safety (got $retain)")
     val spark = batch.sparkSession
-    versions(spark, stateDir).lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"summary state at $stateDir has applied batch_id $m > incoming $batchId: the " +
-          "stream's checkpoint was reset independently of the state dir — restore the " +
-          "checkpoint or start a fresh state dir")
-    }
-    val prior = versions(spark, stateDir).filter(_ < batchId).lastOption
-      .map(v => readVersion(spark, stateDir, v))
+    val vs = layout(spark, stateDir, retain)
+    vs.guard("summary state", batchId)
+    val prior = vs.prior(batchId).map(v => readVersion(spark, vs.path(v)))
     val delta = batchSummary(batch, d1, d2, measure)
     val merged = prior.fold(delta)(st => merge(st, delta, d1, d2))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    // prune AFTER the commit: keep the `retain` newest COMMITTED versions (the
-    // newest pre-existing one is the crash fallback) and drop everything else —
-    // including uncommitted junk dirs left by crashed writes, which the
-    // _SUCCESS-gated versions() already refuses to surface
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = versions(spark, stateDir).takeRight(retain).map(v => s"v=$v").toSet
-    fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v=") && !keep.contains(n)) fs.delete(s.getPath, true): Unit
-    }
-    // auto-compact past the file-count trip (the IncrementalDecontaminate idiom):
-    // the merge shuffle leaves one near-empty file per partition on a grain-bounded
-    // summary; rewrite the just-committed version, crash-safe. SIZE-GATED (r13): the
-    // trip exists for small-file hygiene, so it must not fire on a big state whose
-    // per-file size is already healthy — at a 7.2M-key grain the old count-only trip
-    // made EVERY batch pay a full single-threaded rewrite of ~200 MB state (the
-    // dominant cost in the r12 soak's 16-20 s/batch flat numbers)
-    val vp = new Path(s"$stateDir/v=$batchId")
-    val dataFiles = fs.listStatus(vp).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    if (autoCompactFiles > 0 && dataFiles.length > autoCompactFiles &&
-      dataFiles.map(_.getLen).sum / dataFiles.length < SmallFileBytes)
+    merged.write.mode("overwrite").parquet(vs.path(batchId))
+    vs.prune()
+    // auto-compact past the file-count trip: the merge shuffle leaves one near-empty
+    // file per partition on a grain-bounded summary. SIZE-GATED (r13): the trip exists
+    // for small-file hygiene, so it must not fire on a big state whose per-file size is
+    // already healthy — at a 7.2M-key grain the old count-only trip made EVERY batch
+    // pay a full single-threaded rewrite of ~200 MB state (the dominant cost in the r12
+    // soak's 16-20 s/batch flat numbers)
+    val fs = BatchState.fsOf(spark, stateDir)
+    val vp = new Path(vs.path(batchId))
+    val sizes = graft.sinks.AtomicSwap.dataFileNames(fs, vp)
+      .map(n => fs.getFileStatus(new Path(vp, n)).getLen)
+    if (autoCompactFiles > 0 && sizes.length > autoCompactFiles &&
+      sizes.sum / sizes.length < SmallFileBytes)
       compactState(spark, stateDir): Unit
     // footer metadata, not a count() job: the returned row count is bookkeeping the
     // parquet footers already carry (one fewer Spark job per micro-batch, guide §1.2)
-    graft.sinks.ParquetMeta.rowCount(
-      spark.sparkContext.hadoopConfiguration, s"$stateDir/v=$batchId")
+    graft.sinks.ParquetMeta.rowCount(spark.sparkContext.hadoopConfiguration, vs.path(batchId))
   }
 
   /** The maintained summary at its newest version, with read-time finalization
     * (avg = s/n — derived metrics never live in state). */
   def current(spark: SparkSession, stateDir: String): DataFrame = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(
+    val vs = layout(spark, stateDir)
+    val v = vs.newest.getOrElse(
       throw new IllegalStateException(s"no maintained summary at $stateDir"))
-    readVersion(spark, stateDir, v)
+    readVersion(spark, vs.path(v))
       .withColumn("avg", round(col("s").cast("double") / col("n"), 6))
   }
 

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Incrementally maintained BQ IVF signature index — ANN index MAINTENANCE for a
@@ -50,33 +49,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  */
 object IncrementalBqIndex {
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committedIds(fs: FileSystem, indexDir: String, prefix: String): Seq[Long] = {
-    val p = new Path(indexDir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith(prefix) &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix(prefix).toLong)
-      .toSeq.sorted
-  }
-
   /** Committed waves: `w=<id>` dirs whose `_SUCCESS` landed. */
   private[streaming] def waves(spark: SparkSession, indexDir: String): Seq[Long] =
-    committedIds(fsOf(spark, indexDir), indexDir, "w=")
+    new BatchState.Versions(BatchState.fsOf(spark, indexDir), indexDir, "w=").committed
 
   /** Committed compactions: `c=<id>` covers every wave ≤ id. */
-  private[streaming] def compacts(spark: SparkSession, indexDir: String): Seq[Long] =
-    committedIds(fsOf(spark, indexDir), indexDir, "c=")
+  private def compacts(spark: SparkSession, indexDir: String): Seq[Long] =
+    new BatchState.Versions(BatchState.fsOf(spark, indexDir), indexDir, "c=").committed
+
+  /** The newest batch id the index has applied, through a wave or a compaction. */
+  private[streaming] def applied(spark: SparkSession, indexDir: String): Option[Long] =
+    (waves(spark, indexDir) ++ compacts(spark, indexDir)).maxOption
 
   /** The live read set: the newest committed compaction (if any) plus every
     * committed wave newer than it — EXCLUDING empty marker waves (an empty batch
     * commits a `_SUCCESS`-only wave to keep batch-id monotonicity for the reset
     * guard, but contributes no readable parquet). */
   private def liveDirs(spark: SparkSession, indexDir: String): Seq[String] = {
-    val fs = fsOf(spark, indexDir)
+    val fs = BatchState.fsOf(spark, indexDir)
     def hasDataFiles(d: String) =
       fs.listStatus(new Path(d)).exists(s => !s.getPath.getName.startsWith("_"))
     val comp = compacts(spark, indexDir).lastOption
@@ -90,24 +80,6 @@ object IncrementalBqIndex {
   def hasData(spark: SparkSession, indexDir: String): Boolean =
     liveDirs(spark, indexDir).nonEmpty
 
-  private def checkOrWriteMeta(fs: FileSystem, indexDir: String, bits: Int): Unit = {
-    val p = new Path(s"$indexDir/meta")
-    val want = s"bits=$bits\n"
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val got = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      if (got != want) throw new IllegalStateException(
-        s"signature index at $indexDir was built with ${got.trim} but this run " +
-          s"supplies bits=$bits — signatures at mixed bit budgets cannot be " +
-          "Hamming-compared; rebuild the index or use its bit budget")
-    } else {
-      fs.mkdirs(new Path(indexDir))
-      val out = fs.create(p, true)
-      out.write(want.getBytes("UTF-8"))
-      out.close()
-    }
-  }
-
   /** The quantizer the index was built with — probes MUST use this one (pruning
     * against different centroids silently probes the wrong cells). */
   def centroids(spark: SparkSession, indexDir: String): Array[Array[Float]] =
@@ -120,15 +92,13 @@ object IncrementalBqIndex {
       centroids: Array[Array[Float]], bits: Int = 256,
       idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
     val spark = batch.sparkSession
-    val fs = fsOf(spark, indexDir)
-    checkOrWriteMeta(fs, indexDir, bits)
-    (waves(spark, indexDir) ++ compacts(spark, indexDir)).maxOption
-      .filter(_ > batchId).foreach { m =>
-        throw new IllegalStateException(
-          s"signature index at $indexDir has applied batch_id $m > incoming $batchId: " +
-            "the stream's checkpoint was reset independently of the index dir — " +
-            "restore the checkpoint or rebuild the index")
-      }
+    val fs = BatchState.fsOf(spark, indexDir)
+    BatchState.checkOrWriteMeta(fs, indexDir, s"bits=$bits\n") { got =>
+      s"signature index at $indexDir was built with ${got.trim} but this run " +
+        s"supplies bits=$bits — signatures at mixed bit budgets cannot be " +
+        "Hamming-compared; rebuild the index or use its bit budget"
+    }
+    BatchState.guard("signature index", indexDir, applied(spark, indexDir), batchId)
     val cpath = s"$indexDir/centroids"
     if (!fs.exists(new Path(cpath, "_SUCCESS")))
       graft.ops.ModelStore.saveCentroids(spark, centroids, cpath)
@@ -186,10 +156,10 @@ object IncrementalBqIndex {
    * next compaction sweeps. Returns the number of dirs swept.
    */
   def compact(spark: SparkSession, indexDir: String): Int = {
-    val fs = fsOf(spark, indexDir)
+    val fs = BatchState.fsOf(spark, indexDir)
     val live = liveDirs(spark, indexDir)
     if (live.size <= 1) return 0 // already consolidated (or empty)
-    val coverId = (waves(spark, indexDir) ++ compacts(spark, indexDir)).max
+    val coverId = applied(spark, indexDir).get
     val consolidated = live.map(d => spark.read.parquet(d)).reduce(_ unionByName _)
       .repartition(col("cell")) // ~one file per cell on write and every later read
     consolidated.write.mode("overwrite").partitionBy("cell")
@@ -206,15 +176,4 @@ object IncrementalBqIndex {
     }
     swept
   }
-
-  /** Wire into a bounded streaming query (AvailableNow, the IngestDedup pattern). */
-  def start(stream: DataFrame, indexDir: String, checkpointDir: String,
-      centroids: Array[Array[Float]], bits: Int = 256): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, indexDir, centroids, bits): Unit
-      }
-      .start()
 }

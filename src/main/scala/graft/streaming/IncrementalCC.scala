@@ -25,12 +25,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  *     roots and brand-new nodes, sized by the batch, never the corpus;
  *  4. append the resulting `(node → min root)` redirects.
  *
- * Replay safety mirrors [[IngestDedup]] exactly: the probe (step 1) excludes store
- * rows written by the batch being (re)applied, so a crash-replayed batch resolves
+ * Replay safety is the [[BatchState]] append log, as in [[IngestDedup]]: the probe
+ * (step 1) sees only [[BatchState.prior]] rows, so a crash-replayed batch resolves
  * against the same prior state and recomputes byte-identical redirects; appends are
  * harmless under replay because [[resolve]] collapses duplicate rows with
- * `min(parent)` (duplicates always agree); `_batch_<id>` markers make a
- * checkpoint-reset fail loudly instead of silently corrupting labels.
+ * `min(parent)` (duplicates always agree); a reset checkpoint fails loudly.
  *
  * Compaction ([[compactStore]], auto-triggered past a file-count trip like the
  * dedup indexes) flattens chains to depth 1 — and stays replay-safe by flattening
@@ -58,45 +57,8 @@ object IncrementalCC {
     * interrupted-compaction recovery first, so a consumer can never observe the
     * mid-swap window as an empty store. Use this, not a raw `spark.read.parquet` on
     * the store dir, to feed [[resolve]]. */
-  def readLabels(spark: SparkSession, dir: String): DataFrame = readStore(spark, dir)
-
-  private def readStore(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      recoverCompaction(fs, p)
-      spark.read.schema(StoreSchema).parquet(dir)
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StoreSchema)
-  }
-
-  /**
-   * Idempotent recovery from a compaction interrupted mid-swap — delegates to the
-   * manifest protocol ([[graft.sinks.AtomicSwap]]): [[compactStore]] writes the
-   * rewrite under `_compact_tmp`, records a `_MANIFEST` (rename plan + the exact
-   * pre-existing files to delete), then executes rename-FIRST. Any crash point
-   * replays safely on the next read; in particular the ADVICE r9 #1 window — a
-   * crash between the swap finishing and the tmp drop, leaving a complete tmp with
-   * zero parquet files — now deletes the tmp only and can never empty the store
-   * while `_batch_` markers survive.
-   */
-  private def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit =
-    graft.sinks.AtomicSwap.finishSwap(fs, p)
-
-  private def recordedMax(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_batch_") => n.stripPrefix("_batch_").toLong }
-      .maxOption
-  }
-
-  private def recordBatch(spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val p = new Path(dir, s"_batch_$batchId")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(p, true).close()
-  }
+  def readLabels(spark: SparkSession, dir: String): DataFrame =
+    BatchState.read(spark, dir, StoreSchema)
 
   /**
    * Resolve `ids` (one `id` column) to component roots by chasing parent redirects to
@@ -137,16 +99,9 @@ object IncrementalCC {
   def applyBatch(edges: DataFrame, batchId: Long, storeDir: String,
       autoCompactFiles: Int = DefaultAutoCompactFiles): Long = {
     val spark = edges.sparkSession
-    recordedMax(spark, storeDir).filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"label store at $storeDir has applied batch_id $m > incoming $batchId: the " +
-          "stream's checkpoint was reset independently of the store — restore the " +
-          "checkpoint or start a fresh store")
-    }
-    // NULL-batch rows (external backfill) must still resolve: =!= alone is
-    // three-valued and would drop them from the probe (the IngestDedup lesson)
-    val prior = readStore(spark, storeDir)
-      .filter(col("batch_id").isNull || col("batch_id") =!= lit(batchId))
+    val fs = BatchState.fsOf(spark, storeDir)
+    BatchState.guard("label store", storeDir, BatchState.applied(fs, storeDir), batchId)
+    val prior = BatchState.prior(spark, storeDir, StoreSchema, batchId)
     val e = edges.select(col("u"), col("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct().localCheckpoint(eager = true)
@@ -174,22 +129,10 @@ object IncrementalCC {
         redirects.coalesce(1).write.mode("append").parquet(storeDir)
         redirects.count()
       }
-    recordBatch(spark, storeDir, batchId)
-    maybeCompact(spark, storeDir, autoCompactFiles)
+    BatchState.mark(fs, storeDir, batchId)
+    // no size gate: the trip also bounds redirect-chain depth for resolve
+    if (BatchState.tripped(fs, storeDir, autoCompactFiles)) compactStore(spark, storeDir): Unit
     appended
-  }
-
-  private def maybeCompact(spark: SparkSession, storeDir: String,
-      autoCompactFiles: Int): Unit = {
-    if (autoCompactFiles <= 0) return
-    val p = new Path(storeDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val nData = fs.listStatus(p).count { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (nData > autoCompactFiles) compactStore(spark, storeDir): Unit
   }
 
   /**
@@ -198,14 +141,13 @@ object IncrementalCC {
    * crash-replay of the latest batch still probes exactly the prior state it saw the
    * first time; the latest batch's own links are rewritten verbatim. Flattened rows
    * keep their original batch_id (all < latest, so exclusion semantics are
-   * unchanged). Same read → tmp → swap ordering as the dedup index compaction: a
-   * crash at any point leaves a resolvable store.
+   * unchanged). The flattened store goes in through [[BatchState.rewrite]]: a crash
+   * at any point leaves a resolvable store.
    */
   def compactStore(spark: SparkSession, storeDir: String): Long = {
-    val p = new Path(storeDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    val latest = recordedMax(spark, storeDir).getOrElse(Long.MaxValue)
+    val fs = BatchState.fsOf(spark, storeDir)
+    if (!fs.exists(new Path(storeDir))) return 0L
+    val latest = BatchState.applied(fs, storeDir).getOrElse(Long.MaxValue)
     // Group by (id, batch) — with a frozen sentinel standing in for NULL — NOT by id
     // alone: Spark's min ignores NULLs, so `min(batch_id)` over an id carrying both a
     // NULL-batch external-backfill row and a latest-batch row would collapse to
@@ -214,7 +156,7 @@ object IncrementalCC {
     // rows a replay of that batch must not see. Keeping one row per (id, batch)
     // preserves exclusion semantics exactly; duplicates WITHIN a batch (replays, which
     // always agree) still collapse. Long.MinValue maps back to NULL after the agg.
-    val all = readStore(spark, storeDir)
+    val all = readLabels(spark, storeDir)
       .groupBy(col("id"),
         coalesce(col("batch_id"), lit(Long.MinValue)).as("__b"))
       .agg(min(col("parent")).as("parent"))
@@ -229,18 +171,9 @@ object IncrementalCC {
       .select(col("id"), col("component_id").as("parent"), col("batch_id"))
     val rewritten = flatFrozen.union(fresh).localCheckpoint(eager = true)
     val n = rewritten.count()
-    val tmp = new Path(p, "_compact_tmp")
-    fs.delete(tmp, true)
-    // size the rewrite like GroupingSetsMv.compactState (r13): coalesce(1) was a
-    // single-threaded full rewrite — fine for the store's usual tiny redirect
-    // files, pathological once the label store itself grows large
-    val totalBytes = graft.sinks.AtomicSwap.dataFileNames(fs, p)
-      .map(f => fs.getFileStatus(new Path(p, f)).getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / (32L << 20)).toInt)
-    rewritten.coalesce(nOut).write.mode("overwrite").parquet(tmp.toString)
-    // manifest-gated rename-first swap: new files move in under unique names, THEN
-    // the manifest's explicit old-file list is deleted — crash-safe at every point
-    graft.sinks.AtomicSwap.commitSwap(fs, p)
+    // size-targeted like GroupingSetsMv.compactState (r13): coalesce(1) was a
+    // single-threaded full rewrite, pathological once the label store grows large
+    BatchState.rewrite(spark, storeDir, rewritten, 32L << 20)
     n
   }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
@@ -23,13 +22,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  * union of the first N batches — the `doc_decontaminate` oracle pins the shared
  * result shape cross-engine, and the spec pins the equality at every boundary.
  *
- * Replay/reset safety, exactly [[IngestDedup]]: applied corpus batch ids are
- * `_batch_<id>` marker files beside the output; a replayed batch OVERWRITES its own
- * `batch=<id>` dir (idempotent); an incoming id below the recorded max means a
- * reset checkpoint against surviving state — loud failure. Eval-store additions are
- * versioned the same way on the store dir, append novel digests only (anti-join),
- * and auto-compact through [[graft.sinks.Bucketing.compactIndexDir]] past a
- * file-count trip.
+ * Replay/reset safety is the [[BatchState]] append log on both dirs: the output dir
+ * carries `_batch_<id>` markers and a replayed batch OVERWRITES its own `batch=<id>`
+ * dir; the eval store appends novel digests only (anti-join against its prior rows)
+ * and auto-compacts through [[BatchState.compactLog]] past a file-count trip.
  *
  * Scale shape: the store holds DISTINCT digests only (~10M longs for a 100k-doc
  * suite); the per-batch probe is a digest-only join — AQE broadcasts the store when
@@ -44,42 +40,6 @@ object IncrementalDecontaminate {
   val StoreSchema: StructType = StructType(Seq(
     StructField("__h", LongType), StructField("batch_id", LongType)))
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readStore(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    val fs = fsOf(spark, dir)
-    if (fs.exists(p)) {
-      // finish any interrupted auto-compaction before trusting the listing
-      graft.sinks.AtomicSwap.finishSwap(fs, p)
-      spark.read.schema(StoreSchema).parquet(dir)
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StoreSchema)
-  }
-
-  private def recordedMax(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(dir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_batch_") => n.stripPrefix("_batch_").toLong }
-      .maxOption
-  }
-
-  private def recordBatch(spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val fs = fsOf(spark, dir)
-    fs.create(new Path(dir, s"_batch_$batchId"), true).close()
-  }
-
-  private def resetGuard(spark: SparkSession, dir: String, batchId: Long, what: String): Unit =
-    recordedMax(spark, dir).filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"$what at $dir has applied batch_id $m > incoming $batchId: the stream's " +
-          "checkpoint was reset independently of the state — restore the checkpoint " +
-          "or start a fresh state/output pair")
-    }
-
   /** Add an eval-suite batch to the digest store: one tokenize scan of the batch,
     * novel digests only (anti-join against the store EXCLUDING this batch's own
     * prior rows — the IngestDedup replay convention, so a crash-replay re-derives
@@ -91,9 +51,9 @@ object IncrementalDecontaminate {
       n: Int = 13, textCol: String = "text", idCol: String = "doc_id",
       kernel: Boolean = true, autoCompactFiles: Int = 64): Long = {
     val spark = evalBatch.sparkSession
-    resetGuard(spark, evalDir, batchId, "eval digest store")
-    val prior = readStore(spark, evalDir).filter(
-      col("batch_id").isNull || col("batch_id") =!= lit(batchId))
+    val fs = BatchState.fsOf(spark, evalDir)
+    BatchState.guard("eval digest store", evalDir, BatchState.applied(fs, evalDir), batchId)
+    val prior = BatchState.prior(spark, evalDir, StoreSchema, batchId)
     val novel = graft.ops.TextOps.decontaminateGrams(evalBatch, n, textCol, idCol, kernel)
       .select(explode(col("__hs")).as("__h")).distinct()
       .join(prior.select("__h"), Seq("__h"), "left_anti")
@@ -102,14 +62,8 @@ object IncrementalDecontaminate {
     // digest-only payload: one near-empty file per shuffle partition otherwise
     novel.withColumn("batch_id", lit(batchId)).coalesce(1)
       .write.mode("append").parquet(evalDir)
-    recordBatch(spark, evalDir, batchId)
-    val fs = fsOf(spark, evalDir)
-    val nData = fs.listStatus(new Path(evalDir)).count { s =>
-      val nm = s.getPath.getName
-      s.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-    }
-    if (autoCompactFiles > 0 && nData > autoCompactFiles)
-      graft.sinks.Bucketing.compactIndexDir(spark, evalDir, StoreSchema): Unit
+    BatchState.mark(fs, evalDir, batchId)
+    BatchState.maybeCompact(spark, evalDir, StoreSchema, autoCompactFiles)
     cnt
   }
 
@@ -120,8 +74,9 @@ object IncrementalDecontaminate {
       n: Int = 13, textCol: String = "text", idCol: String = "doc_id",
       kernel: Boolean = true): Long = {
     val spark = batch.sparkSession
-    resetGuard(spark, outDir, batchId, "decontamination output")
-    val evalHashes = readStore(spark, evalDir)
+    val fs = BatchState.fsOf(spark, outDir)
+    BatchState.guard("decontamination output", outDir, BatchState.applied(fs, outDir), batchId)
+    val evalHashes = BatchState.read(spark, evalDir, StoreSchema)
       .select("__h").distinct().withColumn("__hit", lit(1L))
     val flagged = graft.ops.TextOps.decontaminateGrams(batch, n, textCol, idCol, kernel)
       .select(col(idCol), explode_outer(col("__hs")).as("__h"))
@@ -132,7 +87,7 @@ object IncrementalDecontaminate {
       .select(col(idCol), col("n_ngrams"), col("n_shared"),
         (col("n_shared") >= 1L).as("contaminated"))
     flagged.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    recordBatch(spark, outDir, batchId)
+    BatchState.mark(fs, outDir, batchId)
     // footer metadata, not a count() job (guide §1.2): one fewer job per micro-batch
     graft.sinks.ParquetMeta.rowCount(
       spark.sparkContext.hadoopConfiguration, s"$outDir/batch=$batchId")
@@ -142,7 +97,7 @@ object IncrementalDecontaminate {
     * one-shot `decontaminate` over the same corpus (docs partitioned across batches). */
   def results(spark: SparkSession, outDir: String): DataFrame = {
     val p = new Path(outDir)
-    val fs = fsOf(spark, outDir)
+    val fs = BatchState.fsOf(spark, outDir)
     val parts = if (fs.exists(p))
       fs.listStatus(p).filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
         .map(_.getPath.toString).sorted
@@ -150,18 +105,4 @@ object IncrementalDecontaminate {
     require(parts.nonEmpty, s"no decontamination output at $outDir")
     spark.read.parquet(parts.toIndexedSeq: _*)
   }
-
-  /** Continuous form: a corpus document stream flagged micro-batch by micro-batch
-    * against a pre-built eval store (AvailableNow by default, the IngestDedup
-    * pattern). */
-  def start(docs: DataFrame, evalDir: String, outDir: String, checkpointDir: String,
-      n: Int = 13, textCol: String = "text", idCol: String = "doc_id",
-      kernel: Boolean = true, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, evalDir, outDir, n, textCol, idCol, kernel): Unit
-      }
-      .start()
 }

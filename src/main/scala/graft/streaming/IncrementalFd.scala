@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,26 +18,21 @@ import org.apache.spark.sql.functions._
  * GUARANTEE check as `emb_fd_sketch` — PSD + bound against the exact gram of the
  * union — not value equality (the verdict-gate discipline).
  *
- * Replay safety is state versioning: batch b merges the newest committed version
- * < b and overwrites `v=<b>` (crash-replay re-reads the same predecessor); an
- * incoming batchId below the max applied version is a reset checkpoint against
- * surviving state — loud failure. `_SUCCESS`-gated versions; prune after commit.
+ * Replay safety is state versioning, the [[BatchState.Versions]] protocol: batch b
+ * merges the newest committed `v=` below b, overwrites `v=<b>` and prunes.
  *
  * Scale shape: per-batch work is one distributed FD aggregate over the BATCH; state
  * is O(ℓ·d) — constant, the smallest state of any incremental operator here.
  */
 object IncrementalFd {
 
-  private def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith("v=") &&
-        fs.exists(new Path(s.getPath, "sketch/_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .toSeq.sorted
-  }
+  private def layout(spark: SparkSession, stateDir: String, retain: Int = 2) =
+    new BatchState.Versions(BatchState.fsOf(spark, stateDir), stateDir, "v=",
+      Seq("sketch"), retain)
+
+  private def readSketch(spark: SparkSession, dir: String): Seq[Array[Double]] =
+    spark.read.parquet(s"$dir/sketch")
+      .orderBy(col("i")).collect().map(_.getSeq[Double](1).toArray).toSeq
 
   /** Apply one micro-batch: guard, distributed batch sketch, driver merge into the
     * newest committed state, overwrite `v=<batchId>`, prune. Returns sketch rows. */
@@ -46,20 +40,12 @@ object IncrementalFd {
       vecCol: String = "embedding", retain: Int = 2): Long = {
     val spark = batch.sparkSession
     import spark.implicits._
-    versions(spark, stateDir).lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"fd state at $stateDir has applied batch_id $m > incoming $batchId: the " +
-          "stream's checkpoint was reset independently of the state dir — restore " +
-          "the checkpoint or start a fresh state dir")
-    }
+    val vs = layout(spark, stateDir, retain)
+    vs.guard("fd state", batchId)
     val batchSketch = batch
       .agg(graft.functions.FdSketch.fdSketchAgg(col(vecCol), l).as("b"))
       .head().getSeq[scala.collection.Seq[Double]](0).map(_.toArray)
-    val prior = versions(spark, stateDir).filter(_ < batchId).lastOption
-      .map(v => spark.read.parquet(s"$stateDir/v=$v/sketch")
-        .orderBy(col("i")).collect()
-        .map(_.getSeq[Double](1).toArray).toSeq)
-      .getOrElse(Seq.empty)
+    val prior = vs.prior(batchId).map(v => readSketch(spark, vs.path(v))).getOrElse(Seq.empty)
     // driver merge through the aggregate's own buffer: ≤ 2ℓ rows of ℓ·d state
     val dim = (prior ++ batchSketch).headOption.map(_.length).getOrElse(0)
     val merged =
@@ -73,22 +59,15 @@ object IncrementalFd {
       }
     merged.zipWithIndex.map { case (row, i) => (i, row.toSeq) }
       .toDF("i", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v=$batchId/sketch")
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = versions(spark, stateDir).takeRight(retain).map(v => s"v=$v").toSet
-    fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v=") && !keep.contains(n)) fs.delete(s.getPath, true): Unit
-    }
+      .coalesce(1).write.mode("overwrite").parquet(s"${vs.path(batchId)}/sketch")
+    vs.prune()
     merged.length.toLong
   }
 
   /** The maintained sketch rows at the newest version. */
   def current(spark: SparkSession, stateDir: String): Seq[Array[Double]] = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no maintained fd state at $stateDir"))
-    spark.read.parquet(s"$stateDir/v=$v/sketch")
-      .orderBy(col("i")).collect().map(_.getSeq[Double](1).toArray).toSeq
+    val vs = layout(spark, stateDir)
+    readSketch(spark, vs.path(vs.newest.getOrElse(
+      throw new IllegalStateException(s"no maintained fd state at $stateDir"))))
   }
 }

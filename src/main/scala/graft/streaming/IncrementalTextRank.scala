@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Incrementally maintained TextRank (Mihalcea & Tarau, EMNLP 2004) over a DOCUMENT
@@ -20,11 +18,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * the first N batches (the `doc_textrank` oracle pins the shared result shape
  * cross-engine, and the spec pins the equality at every batch boundary).
  *
- * Replay safety is state versioning, exactly [[GroupingSetsMv.applyBatch]]: batch b
- * merges the newest version < b and overwrites `v=<b>` (a crash-replay re-reads the
- * same predecessor and converges); an incoming batchId below the max applied version
- * means a reset checkpoint against surviving state — loud failure. Versions older
- * than `retain` are pruned after a successful write.
+ * Replay safety is state versioning, the [[BatchState.Versions]] protocol: batch b
+ * merges the newest committed `v=` below b, overwrites `v=<b>` and prunes.
  *
  * Scale shape: the per-batch work is one tokenize scan of the BATCH plus a key-sum
  * merge into vocabulary-sized state (Heaps' law: vocab and distinct-bigram tables
@@ -50,56 +45,33 @@ object IncrementalTextRank {
     (uni, pairs)
   }
 
-  /** COMMITTED versions only (the GroupingSetsMv gate): a version exists once BOTH
-    * its table writes carry Spark's `_SUCCESS` marker — uni writes before pairs, so
-    * a crash between them leaves a junk dir that must stay invisible to
-    * prior-selection, the reset guard and `current()`. */
-  private def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator
-      .filter(s => s.getPath.getName.startsWith("v=") &&
-        fs.exists(new Path(s.getPath, "uni/_SUCCESS")) &&
-        fs.exists(new Path(s.getPath, "pairs/_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .toSeq.sorted
-  }
+  /** A version is committed once BOTH table writes carry `_SUCCESS` — uni writes
+    * before pairs, so a crash between them leaves a junk dir nothing may read. */
+  private def layout(spark: SparkSession, stateDir: String, retain: Int = 2) =
+    new BatchState.Versions(BatchState.fsOf(spark, stateDir), stateDir, "v=",
+      Seq("uni", "pairs"), retain)
 
   /** Apply one micro-batch: guard, merge newest version < batchId, overwrite
     * `v=<batchId>` (uni + pairs side by side), prune. Returns the vocabulary size. */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
       textCol: String = "text", retain: Int = 2): Long = {
     val spark = batch.sparkSession
-    versions(spark, stateDir).lastOption.filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"textrank state at $stateDir has applied batch_id $m > incoming $batchId: " +
-          "the stream's checkpoint was reset independently of the state dir — " +
-          "restore the checkpoint or start a fresh state dir")
-    }
-    val prior = versions(spark, stateDir).filter(_ < batchId).lastOption
+    val vs = layout(spark, stateDir, retain)
+    vs.guard("textrank state", batchId)
+    val prior = vs.prior(batchId).map(vs.path)
     val (uniD, pairD) = batchDelta(batch, textCol)
-    val uni = prior.map(v => spark.read.parquet(s"$stateDir/v=$v/uni"))
+    val uni = prior.map(d => spark.read.parquet(s"$d/uni"))
       .fold(uniD)(st => st.unionByName(uniD)
         .groupBy("tok").agg(sum(col("c")).cast("long").as("c")))
-    val pairs = prior.map(v => spark.read.parquet(s"$stateDir/v=$v/pairs"))
+    val pairs = prior.map(d => spark.read.parquet(s"$d/pairs"))
       .fold(pairD)(st => st.unionByName(pairD)
         .groupBy("a", "b").agg(sum(col("n")).cast("long").as("n")))
-    uni.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/uni")
-    pairs.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/pairs")
-    // prune AFTER the commit: keep the `retain` newest COMMITTED versions, drop
-    // everything else including uncommitted junk from crashed writes (invisible to
-    // the _SUCCESS-gated versions() either way)
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keep = versions(spark, stateDir).takeRight(retain).map(v => s"v=$v").toSet
-    fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("v=") && !keep.contains(n)) fs.delete(s.getPath, true): Unit
-    }
+    uni.write.mode("overwrite").parquet(s"${vs.path(batchId)}/uni")
+    pairs.write.mode("overwrite").parquet(s"${vs.path(batchId)}/pairs")
+    vs.prune()
     // footer metadata, not a count() job (guide §1.2): one fewer job per micro-batch
     graft.sinks.ParquetMeta.rowCount(
-      spark.sparkContext.hadoopConfiguration, s"$stateDir/v=$batchId/uni")
+      spark.sparkContext.hadoopConfiguration, s"${vs.path(batchId)}/uni")
   }
 
   /** The maintained keyword ranking at the newest version — the same frequent-vocab
@@ -107,11 +79,12 @@ object IncrementalTextRank {
     * [[graft.ops.TextOps.textRank]], recomputed on the bounded state graph. */
   def current(spark: SparkSession, stateDir: String,
       minCount: Long = 5, topK: Int = 50): DataFrame = {
-    val v = versions(spark, stateDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no maintained textrank state at $stateDir"))
-    val freq = spark.read.parquet(s"$stateDir/v=$v/uni")
+    val vs = layout(spark, stateDir)
+    val d = vs.path(vs.newest.getOrElse(
+      throw new IllegalStateException(s"no maintained textrank state at $stateDir")))
+    val freq = spark.read.parquet(s"$d/uni")
       .filter(col("c") >= minCount)
-    val pf = spark.read.parquet(s"$stateDir/v=$v/pairs")
+    val pf = spark.read.parquet(s"$d/pairs")
       .join(freq.select(col("tok").as("a")), "a")
       .join(freq.select(col("tok").as("b")), "b")
       .select("a", "b")
@@ -123,16 +96,4 @@ object IncrementalTextRank {
       .limit(topK)
       .select(col("id").as("token"), col("rank_e12"), col("c").as("n_occurrences"))
   }
-
-  /** Continuous form: a document stream maintained into the count state micro-batch
-    * by micro-batch (AvailableNow by default, the IngestDedup pattern). */
-  def start(docs: DataFrame, stateDir: String, checkpointDir: String,
-      textCol: String = "text", trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, stateDir, textCol): Unit
-      }
-      .start()
 }

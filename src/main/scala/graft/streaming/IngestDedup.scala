@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
@@ -31,11 +30,9 @@ import graft.ops.DedupOps
  *  - rows with the same id in one batch collapse to ONE deterministic version (min
  *    digest) before any decision; NULL text is normalized to the empty document, so such
  *    rows are admitted/deduped like any other instead of silently vanishing;
- *  - applied batch ids are recorded as empty `_batch_<id>` marker files next to the index
- *    (O(#batches) driver metadata, invisible to parquet readers) — a stream whose
- *    checkpoint was reset independently of the index presents a batch id BEHIND the
- *    recorded maximum and fails loudly instead of silently re-admitting duplicates and
- *    overwriting old batch directories.
+ *  - the index is a [[BatchState]] append log: `_batch_<id>` markers make a reset
+ *    checkpoint fail loudly instead of silently re-admitting duplicates and overwriting
+ *    old batch directories.
  *
  * Net effect: exactly-once admission with no transactional sink. At 100 TB, persist the
  * index bucketed ([[graft.sinks.Bucketing.writeBucketed]]: by content_md5 for exact — the
@@ -56,33 +53,9 @@ object IngestDedup {
   val SpanIndexSchema: StructType = StructType(Seq(
     StructField("h", LongType), StructField("batch_id", LongType)))
 
-  private def readIndex(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /** Applied-batch bookkeeping: empty `_batch_<id>` files beside the index data. Reading
-    * them is a directory listing — never an index scan. */
-  private def recordedMax(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("_batch_") => n.stripPrefix("_batch_").toLong }
-      .maxOption
-  }
-
-  private def recordBatch(spark: SparkSession, dir: String, batchId: Long): Unit = {
-    val p = new Path(dir, s"_batch_$batchId")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(p, true).close()
-  }
-
   /** Auto-compaction trip point: when a batch leaves the index with more than this many
-    * data files, [[graft.sinks.Bucketing.compactIndexDir]] rewrites them down to
-    * size-targeted files (markers untouched — admission bookkeeping survives). Each
+    * data files, [[BatchState.compactLog]] rewrites them down to size-targeted files
+    * (markers untouched — admission bookkeeping survives). Each
     * micro-batch appends ~one file per shuffle partition, so an unattended long-running
     * ingest otherwise accretes thousands of small files and every probe pays the
     * open/footer cost per file (VERDICT r7 #6). 64 ≈ compaction every few dozen batches
@@ -91,21 +64,6 @@ object IngestDedup {
     * decision-identity across an auto-triggered mid-stream compaction). */
   val DefaultAutoCompactFiles = 64
 
-  private def maybeCompact(spark: SparkSession, indexDir: String, schema: StructType,
-      autoCompactFiles: Int): Unit = {
-    if (autoCompactFiles <= 0) return
-    val p = new Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val nData = fs.listStatus(p).count { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (nData > autoCompactFiles) {
-      graft.sinks.Bucketing.compactIndexDir(spark, indexDir, schema): Unit
-    }
-  }
-
   /** The shared idempotent batch skeleton: guard, normalize, collapse, admit, write.
     * `admit(uniq, priorIndex)` returns the admitted rows keyed by `idCol`;
     * `toIndex` projects them to the index payload (batch_id is appended here). */
@@ -113,17 +71,9 @@ object IngestDedup {
       schema: StructType, textCol: String, idCol: String, autoCompactFiles: Int = 0)(
       admit: (DataFrame, DataFrame) => DataFrame)(toIndex: DataFrame => DataFrame): Long = {
     val spark = batch.sparkSession
-    recordedMax(spark, indexDir).filter(_ > batchId).foreach { m =>
-      throw new IllegalStateException(
-        s"index at $indexDir has applied batch_id $m > incoming $batchId: the stream's " +
-          "checkpoint was reset independently of the index — restore the checkpoint or " +
-          "start a fresh index/output pair")
-    }
-    // index entries with a NULL batch_id (parquet appended by external tooling, or
-    // predating the batch_id column) must still REJECT duplicates: `=!=` alone is
-    // three-valued and would silently drop them from the probe (ADVICE r3)
-    val prior = readIndex(spark, indexDir, schema)
-      .filter(col("batch_id").isNull || col("batch_id") =!= lit(batchId))
+    val fs = BatchState.fsOf(spark, indexDir)
+    BatchState.guard("index", indexDir, BatchState.applied(fs, indexDir), batchId)
+    val prior = BatchState.prior(spark, indexDir, schema, batchId)
     // NULL text = the empty document (one content class, like any other); an
     // at-least-once upstream can also repeat an id with conflicting content — collapse
     // to ONE deterministic version per id (min digest, replay-stable), which makes id
@@ -147,11 +97,11 @@ object IngestDedup {
       toIndex(admitted).withColumn("batch_id", lit(batchId))
         .coalesce(1)
         .write.mode("append").parquet(indexDir)
-      recordBatch(spark, indexDir, batchId)
+      BatchState.mark(fs, indexDir, batchId)
       val n = admitted.count()
-      // after the batch is fully recorded: a crash mid-compaction leaves a valid index
-      // (compactIndexDir's read->tmp->swap ordering) and the marker already exists
-      maybeCompact(spark, indexDir, schema, autoCompactFiles)
+      // after the batch is fully recorded: a crash mid-compaction finishes on the next
+      // read (the rename-first swap) and the marker already exists
+      BatchState.maybeCompact(spark, indexDir, schema, autoCompactFiles)
       n
     } finally admitted.unpersist()
   }

@@ -1251,7 +1251,7 @@ class BucketingSpec extends SparkSpec {
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
     val before = idxFiles(idxB)
     assert(before >= 3, s"3 appended batches should have >=3 files, got $before")
-    val after = graft.sinks.Bucketing.compactIndexDir(spark, idxB, IngestDedup.IndexSchema)
+    val after = graft.streaming.BatchState.compactLog(spark, idxB, IngestDedup.IndexSchema)
     assert(after == 1 && idxFiles(idxB) == 1, s"expected 1 compacted file, got $after")
     // batch markers (exactly-once bookkeeping) must survive the rewrite
     assert(new java.io.File(idxB, "_batch_2").exists(),

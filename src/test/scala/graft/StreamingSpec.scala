@@ -1692,4 +1692,79 @@ class StreamingSpec extends SparkSpec {
     assert(flagged() == Set((1L, 12L), (3L, 200L)),
       s"user 3's outlier must flag against state from the PREVIOUS run: ${flagged()}")
   }
+
+  test("append logs: a crash mid-compaction (rewrite parked in _compact_tmp, old files gone) still rejects duplicates") {
+    import graft.streaming.{ChunkStore, IngestDedup}
+    import graft.sinks.AtomicSwap
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-log-crash").toString
+    // the old delete-old-then-move-in compaction's crash window: a complete rewrite
+    // under `_compact_tmp`, the data files already deleted, the markers intact
+    def crashMidCompaction(dir: String, schema: org.apache.spark.sql.types.StructType): Unit = {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark.read.schema(schema).parquet(dir).coalesce(1)
+        .write.parquet(new Path(p, AtomicSwap.TmpName).toString)
+      AtomicSwap.dataFileNames(fs, p).foreach(n => fs.delete(new Path(p, n), false))
+    }
+    val (idx, out) = (s"$base/index", s"$base/out")
+    assert(IngestDedup.applyBatch(Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
+      0L, idx, out) == 2L)
+    crashMidCompaction(idx, IngestDedup.IndexSchema)
+    val dupAdmitted =
+      IngestDedup.applyBatch(Seq((3L, "alpha")).toDF("doc_id", "text"), 1L, idx, out)
+    val blob = { val b = new Array[Byte](4000); new scala.util.Random(7).nextBytes(b); b }
+    val store = s"$base/chunks"
+    assert(ChunkStore.applyBatch(Seq((1L, blob)).toDF("id", "blob"), 0L, store) > 0L)
+    crashMidCompaction(store, ChunkStore.Schema)
+    val dupChunks = ChunkStore.applyBatch(Seq((2L, blob)).toDF("id", "blob"), 1L, store)
+    // (admitted duplicate docs, chunks of an already-stored blob reported novel)
+    assert((dupAdmitted, dupChunks) == (0L, 0L),
+      "duplicates got through a mid-compaction index / chunk store")
+  }
+
+  test("versioned stores refuse retain = 1 before writing anything") {
+    import graft.streaming.{BucketedGroupingSetsMv, GroupingSetsMv, IncrementalFd,
+      IncrementalRake, IncrementalTextRank}
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-retain").toString
+    val mv = Seq(("HIGH", "F", 1.5)).toDF("priority", "status", "amount")
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "a lazy dog sleeps while the quick fox runs")).toDF("doc_id", "text")
+    val vecs = Seq(Array(1.0, 0.0), Array(0.0, 1.0)).toDF("embedding")
+    // with retain = 1 a replay of batch b after the prune finds no predecessor and
+    // commits a delta-only state
+    val stores: Seq[(String, String => Any)] = Seq(
+      "flat" -> (d => GroupingSetsMv.applyBatch(mv, 0L, d, "priority", "status", "amount",
+        retain = 1)),
+      "bucketed" -> (d => BucketedGroupingSetsMv.applyBatch(mv, 0L, d, "priority", "status",
+        "amount", retain = 1)),
+      "textrank" -> (d => IncrementalTextRank.applyBatch(docs, 0L, d, retain = 1)),
+      "rake" -> (d => IncrementalRake.applyBatch(docs, 0L, d, retain = 1)),
+      "fd" -> (d => IncrementalFd.applyBatch(vecs, 0L, d, retain = 1)))
+    val accepted = stores.collect { case (name, apply)
+      if !scala.util.Try(apply(s"$base/$name")).failed.toOption
+        .exists(_.isInstanceOf[IllegalArgumentException]) => name }
+    assert(accepted.isEmpty, s"stores accepted retain = 1: ${accepted.mkString(", ")}")
+    val wrote = stores.map(_._1).filter(name => new java.io.File(s"$base/$name").exists())
+    assert(wrote.isEmpty, s"stores wrote state before refusing retain = 1: ${wrote.mkString(", ")}")
+  }
+
+  test("CdcRunner.run removes its listener when the stream fails") {
+    val base = Files.createTempDirectory("graft-cdc-listener").toString
+    val spool = s"$base/spool"
+    writeSpool(spool, "000.jsonl", Seq(
+      env("inv.sales", "r", """{"id":1,"name":"a"}""", null, 1000)))
+    // the table's staging path is a regular file, so the staging append fails
+    Files.createDirectories(Paths.get(s"$base/work/staging"))
+    Files.write(Paths.get(s"$base/work/staging/inv_sales"), "x".getBytes)
+    val stats = new graft.streaming.SyncStats
+    intercept[Exception] {
+      CdcRunner.run(spark, RunConfig(spoolDir = spool, workDir = s"$base/work",
+        outDir = s"$base/out"), stats)
+    }
+    assert(!spark.streams.listListeners().contains(stats),
+      "a failed run left its SyncStats listener registered on the session")
+  }
 }
