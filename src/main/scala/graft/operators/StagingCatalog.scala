@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
+import graft.sinks.AtomicSwap
 
 /**
  * S8: staging catalog — enumerate the per-table staging produced by a run, read schemas,
@@ -15,6 +17,12 @@ import org.apache.spark.sql.types.StructType
  *
  * All filesystem access goes through the Hadoop `FileSystem` API, so the staging root can
  * live on HDFS/S3/GCS on a real cluster, not just the local disk the tests use.
+ *
+ * The reference's DuckDB transactions roll back an interrupted staging rewrite; here
+ * every in-place rewrite ([[compact]], [[retype]]) goes through the [[AtomicSwap]]
+ * manifest swap, and [[table]], the only staging reader, and [[append]], the only
+ * staging writer, finish an interrupted swap first. A kill at any point of a rewrite
+ * therefore loses no staged row.
  */
 object StagingCatalog {
 
@@ -30,14 +38,29 @@ object StagingCatalog {
   def tables(stagingRoot: String): Seq[String] = {
     val (f, p) = fs(stagingRoot, hadoopConf())
     if (!f.exists(p)) return Nil
-    // dot-prefixed dirs are internal plumbing (compact/retype scratch, swap asides) — a
-    // crash mid-swap must never surface a leftover as a phantom output table
+    // dot-prefixed dirs are never tables (a kill under the pre-manifest staging swap left
+    // `.<t>.old_<n>` asides) and must not surface as phantom output tables
     f.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
       .filterNot(_.startsWith(".")).sorted.toSeq
   }
 
+  /** The dir of one staging table, after finishing any interrupted rewrite swap in it. */
+  private def settled(spark: SparkSession, stagingRoot: String, name: String): String = {
+    val dir = s"$stagingRoot/$name"
+    val (f, p) = fs(dir, spark.sparkContext.hadoopConfiguration)
+    AtomicSwap.finishSwap(f, p)
+    dir
+  }
+
+  /** One staging table under the merged schema. */
   def table(spark: SparkSession, stagingRoot: String, name: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(s"$stagingRoot/$name")
+    spark.read.option("mergeSchema", "true").parquet(settled(spark, stagingRoot, name))
+
+  /** Append `df` to one staging table. An interrupted rewrite is finished first: its
+    * complete tmp holds the table as it was before this append, so committing it after
+    * the append would delete the appended files. */
+  def append(df: DataFrame, stagingRoot: String, name: String): Unit =
+    df.write.mode("append").parquet(settled(df.sparkSession, stagingRoot, name))
 
   def tableSchema(spark: SparkSession, stagingRoot: String, name: String): StructType =
     table(spark, stagingRoot, name).schema
@@ -54,18 +77,14 @@ object StagingCatalog {
   /**
    * Compact a staging table: per-micro-batch appends accumulate one small file per batch
    * per partition; long-running chained syncs degrade scans (file-open overhead dominates).
-   * Rewrites the table to `targetFiles` parquet files under the merged schema, swapped in
-   * safely. The small-file problem is THE operational failure mode of streaming ingestion
-   * at scale; the reference sidesteps it only because DuckDB staging is a single local file.
+   * Rewrites the table to `targetFiles` parquet files under the merged schema. The
+   * small-file problem is THE operational failure mode of streaming ingestion at scale;
+   * the reference sidesteps it only because DuckDB staging is a single local file.
+   * Returns the table's row count.
    */
   def compact(spark: SparkSession, stagingRoot: String, name: String, targetFiles: Int = 1): Long = {
-    val dir = s"$stagingRoot/$name"
-    val tmp = s"$stagingRoot/.compact_$name"
-    val df = spark.read.option("mergeSchema", "true").parquet(dir)
-    df.repartition(targetFiles).write.mode("overwrite").parquet(tmp)
-    val rows = spark.read.parquet(tmp).count()
-    swapInto(spark, dir, tmp)
-    rows
+    rewrite(spark, stagingRoot, name)(_.repartition(targetFiles))
+    table(spark, stagingRoot, name).count()
   }
 
   /**
@@ -73,43 +92,26 @@ object StagingCatalog {
    * E2/E3): existing chunks were written at the narrower type, and parquet `mergeSchema`
    * cannot merge e.g. BIGINT with DOUBLE files — so history is rewritten once at the widen
    * point, keeping every chunk type-consistent. Widening is a rare drift event; the rewrite
-   * cost is one pass over THAT table's staging, paid when the drift arrives.
+   * cost is one pass over THAT table's staging, paid when the drift arrives. The write
+   * keeps the scan's partitioning, so the table keeps its file count. A replay after a
+   * kill finds the widening again and re-runs this idempotent cast.
    */
   def retype(spark: SparkSession, stagingRoot: String, name: String,
-      types: Map[String, org.apache.spark.sql.types.DataType]): Unit = {
-    val dir = s"$stagingRoot/$name"
-    val (f, p) = fs(dir, spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p) || !f.getFileStatus(p).isDirectory) return
-    import org.apache.spark.sql.functions.col
-    val df = table(spark, stagingRoot, name)
-    val casted = df.select(df.columns.map(c =>
-      types.get(c).map(t => col(c).cast(t).as(c)).getOrElse(col(c))): _*)
-    val tmp = s"$stagingRoot/.retype_$name"
-    casted.write.mode("overwrite").parquet(tmp)
-    swapInto(spark, dir, tmp)
-  }
-
-  /**
-   * Replace `liveDir` with `tmpDir` safely: the live dir is first renamed ASIDE (so a crash
-   * between steps leaves the data intact under the aside name, never deleted), tmp is moved
-   * into place, and only then is the old data removed. Rename results are checked — a
-   * failed rename restores the original and throws instead of silently losing the table.
-   * Uses Hadoop renames: atomic on HDFS/local, emulated on object stores.
-   */
-  private[graft] def swapInto(spark: SparkSession, liveDir: String, tmpDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (f, live) = fs(liveDir, conf)
-    val tmp = new Path(tmpDir)
-    // dot-prefixed so a crash between renames leaves the old data invisible to tables()
-    val aside = new Path(live.getParent, "." + live.getName + ".old_" + System.nanoTime())
-    if (!f.rename(live, aside))
-      throw new java.io.IOException(s"staging swap: rename $live aside failed; nothing lost")
-    if (!f.rename(tmp, live)) {
-      f.rename(aside, live) // restore
-      throw new java.io.IOException(s"staging swap: rename $tmp into place failed; restored $live")
+      types: Map[String, DataType]): Unit =
+    rewrite(spark, stagingRoot, name) { df =>
+      df.select(df.columns.map(c => types.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
     }
-    if (!f.delete(aside, true))
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn("staging swap: could not delete aside dir {}; harmless leftover", aside)
+
+  /** In-place rewrite of an existing staging table: `f` of its content is written under
+    * `<table>/_compact_tmp` (hidden from staging reads: Spark's file index skips
+    * `_`-prefixed paths), then [[AtomicSwap.commitSwap]] swaps it in rename-first. No-op
+    * when the table does not exist. */
+  private def rewrite(spark: SparkSession, stagingRoot: String, name: String)(
+      f: DataFrame => DataFrame): Unit = {
+    val (fsys, p) = fs(s"$stagingRoot/$name", spark.sparkContext.hadoopConfiguration)
+    if (!fsys.exists(p) || !fsys.getFileStatus(p).isDirectory) return
+    f(table(spark, stagingRoot, name)).write.mode("overwrite")
+      .parquet(new Path(p, AtomicSwap.TmpName).toString)
+    AtomicSwap.commitSwap(fsys, p)
   }
 }

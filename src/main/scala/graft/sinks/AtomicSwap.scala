@@ -1,12 +1,14 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
- * Crash-safe tmp→store swap for append-only parquet stores compacted in place
- * (the [[graft.streaming.IncrementalCC]] label store, the [[graft.streaming.GroupingSetsMv]]
- * version store — any "per-batch part files + underscore markers" directory).
+ * Crash-safe tmp→store swap for parquet directories rewritten in place: the incremental
+ * stores' compactions ([[graft.streaming.BatchState.rewrite]]) and the CDC staging tables'
+ * `retype`/`compact` ([[graft.operators.StagingCatalog]]) — any "part files + underscore
+ * markers" directory.
  *
  * Protocol (single-writer discipline, as documented on the stores):
  *   1. the caller writes the full rewrite under `<store>/_compact_tmp` (a Spark
@@ -19,7 +21,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  *
  * Every crash point replays safely through [[finishSwap]] (run on every store read):
  *   - no manifest yet → nothing destructive has happened (the manifest is written
- *     only after the tmp parquet completes) → discard the tmp; old data intact;
+ *     only after the tmp parquet completes) → an incomplete tmp is discarded, old data
+ *     intact; a complete one holds the full rewrite and is committed afresh (below);
  *   - crash mid-rename → rename is atomic, so each entry's src and dst never both
  *     exist; re-execution skips done entries (src gone) and finishes the rest;
  *   - crash mid-delete → deletes are by explicit manifest name, idempotent, and can
@@ -33,7 +36,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * Legacy (pre-manifest) tmps — a crash under the old delete-old-then-rename-in
  * ordering, then an upgrade — are disambiguated conservatively: a complete tmp
  * (`_SUCCESS`) that still HOLDS parquet files is the old mid-swap window and the tmp
- * is the authoritative full rewrite (finish old-style); a complete tmp with ZERO
+ * is the authoritative full rewrite, committed through [[commitSwap]] so that a kill
+ * while finishing it replays like any manifest swap; a complete tmp with ZERO
  * parquet files means the swap already finished and only the tmp drop was lost —
  * delete the tmp only, never the data files.
  */
@@ -75,29 +79,25 @@ object AtomicSwap {
       lines.collect { case l if l.startsWith("MV ") =>
         val Array(src, dst) = l.drop(3).split(" ", 2)
         val s = new Path(tmp, src)
-        if (fs.exists(s)) fs.rename(s, new Path(store, dst)): Unit
+        // a failed rename must stop the swap before the deletes: the manifest stays for
+        // the next read to finish
+        if (fs.exists(s) && !fs.rename(s, new Path(store, dst)))
+          throw new java.io.IOException(s"swap into $store: rename of $s failed")
       }
       lines.collect { case l if l.startsWith("RM ") =>
         val f = new Path(store, l.drop(3))
         if (fs.exists(f)) fs.delete(f, false): Unit
       }
       fs.delete(tmp, true): Unit
-    } else if (fs.exists(new Path(tmp, "_SUCCESS"))) {
-      val parquets = fs.listStatus(tmp)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      if (parquets.isEmpty) {
-        // already-finished legacy swap: only the tmp drop was lost. Deleting data
-        // files here was the ADVICE r9 #1 silent-empty bug — drop the tmp ONLY.
-        fs.delete(tmp, true): Unit
-      } else {
-        // legacy mid-swap: the tmp holds the authoritative full rewrite
-        dataFileNames(fs, store).foreach(n => fs.delete(new Path(store, n), false))
-        parquets.sortBy(_.getPath.getName).zipWithIndex.foreach { case (s, i) =>
-          fs.rename(s.getPath, new Path(store, s"compact-$i-${s.getPath.getName}")): Unit
-        }
-        fs.delete(tmp, true): Unit
-      }
-    } else fs.delete(tmp, true): Unit
+    } else if (fs.exists(new Path(tmp, "_SUCCESS")) && fs.listStatus(tmp).exists(s =>
+        s.isFile && s.getPath.getName.endsWith(".parquet")))
+      commitSwap(fs, store) // a complete rewrite is authoritative
+    else {
+      // an incomplete rewrite, or (zero parquets) an already-finished legacy swap whose
+      // tmp drop was lost: deleting data files there was the ADVICE r9 #1 silent-empty
+      // bug — drop the tmp ONLY
+      fs.delete(tmp, true): Unit
+    }
   }
 
   private def readLines(fs: FileSystem, f: Path): Seq[String] = {
@@ -107,5 +107,21 @@ object AtomicSwap {
         new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
       Iterator.continually(r.readLine()).takeWhile(_ != null).filter(_.nonEmpty).toList
     } finally in.close()
+  }
+}
+
+/**
+ * Crash-safe replacement of one small local file (manifests, `state.json`, the schema
+ * registry, signal files, spool files): the text lands in a dot-prefixed sibling tmp
+ * file, which is then renamed over the target in one atomic step. A reader, or the next
+ * run after a kill, sees the old content or the new one, never a torn file.
+ */
+object AtomicFile {
+  def write(path: String, text: String): Unit = {
+    val target = Paths.get(path)
+    Option(target.getParent).foreach(Files.createDirectories(_))
+    val tmp = target.resolveSibling("." + target.getFileName + ".tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 }

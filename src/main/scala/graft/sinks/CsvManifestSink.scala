@@ -1,6 +1,5 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import graft.model.ConnectTypes
@@ -25,7 +24,8 @@ object CsvManifestSink {
   /** Max bytes per CSV slice ~ the reference's 500 MB `SLICER_SLICE_SIZE_MB` (`staging.py:336`). */
   val DefaultMaxRecordsPerFile = 5000000
 
-  def jsonEscape(s: String): String = s.flatMap {
+  /** `s` as a quoted JSON string: the one escaper every hand-written JSON file uses. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -33,7 +33,7 @@ object CsvManifestSink {
     case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
-  }
+  } + "\""
 
   /** K2/K3: headerless CSV directory `<out>/<table>.csv/part-*.csv`, NULLs as empty string
     * (the reference's untyped-text export contract, `staging.py:376-391`). */
@@ -57,18 +57,17 @@ object CsvManifestSink {
   /** K4: `<table>.csv.manifest` JSON next to the CSV directory. */
   def writeManifest(schema: StructType, outTablesDir: String, tableName: String,
       primaryKey: Seq[String], incremental: Boolean): String = {
-    val cols = schema.fields.map(f => "\"" + jsonEscape(f.name) + "\"").mkString("[", ",", "]")
-    val pk = primaryKey.map(p => "\"" + jsonEscape(p) + "\"").mkString("[", ",", "]")
+    val cols = schema.fields.map(f => jsonString(f.name)).mkString("[", ",", "]")
+    val pk = primaryKey.map(jsonString).mkString("[", ",", "]")
     val meta = schema.fields.map { f =>
       val base = ConnectTypes.baseType(f.dataType)
-      s""""${jsonEscape(f.name)}": [{"key": "KBC.datatype.basetype", "value": "$base"}, {"key": "KBC.datatype.nullable", "value": ${f.nullable}}]"""
+      s"""${jsonString(f.name)}: [{"key": "KBC.datatype.basetype", "value": "$base"}, {"key": "KBC.datatype.nullable", "value": ${f.nullable}}]"""
     }.mkString("{", ",", "}")
     val manifest =
       s"""{"columns": $cols, "primary_key": $pk, "incremental": $incremental, "delimiter": ",", "enclosure": "\\"", "column_metadata": $meta}"""
-    val p = Paths.get(s"$outTablesDir/$tableName.csv.manifest")
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, manifest)
-    p.toString
+    val p = s"$outTablesDir/$tableName.csv.manifest"
+    AtomicFile.write(p, manifest)
+    p
   }
 
   /** K5: run state — consumed position + synced tables + per-table schema JSON
@@ -76,17 +75,15 @@ object CsvManifestSink {
     * offset blob ([[OffsetStore]], `component.py:286-288`). */
   def writeState(outDir: String, lastPos: Long, tableSchemas: Map[String, StructType],
       offsetBlobB64: Option[String] = None): String = {
-    val tables = tableSchemas.keys.toSeq.sorted
-      .map(t => "\"" + jsonEscape(t) + "\"").mkString("[", ",", "]")
+    val tables = tableSchemas.keys.toSeq.sorted.map(jsonString).mkString("[", ",", "]")
     val schemas = tableSchemas.toSeq.sortBy(_._1).map { case (t, st) =>
-      s""""${jsonEscape(t)}": ${st.json.trim}"""
+      s"""${jsonString(t)}: ${st.json.trim}"""
     }.mkString("{", ",", "}")
-    val blob = offsetBlobB64.map(b => s""", "last_offset_b64": "${jsonEscape(b)}"""").getOrElse("")
+    val blob = offsetBlobB64.map(b => s""", "last_offset_b64": ${jsonString(b)}""").getOrElse("")
     val state =
       s"""{"last_offset": $lastPos, "last_synced_tables": $tables, "last_schema": $schemas$blob}"""
-    val p = Paths.get(s"$outDir/state.json")
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, state)
-    p.toString
+    val p = s"$outDir/state.json"
+    AtomicFile.write(p, state)
+    p
   }
 }

@@ -1,8 +1,8 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.sql.Connection
+import graft.sinks.AtomicFile
+import graft.sinks.CsvManifestSink.jsonString
 
 /**
  * Live-loop CDC front-end for the spool contract (VERDICT r3 #5): a daemon that TAILS a
@@ -73,7 +73,7 @@ final class SpoolTailWriter(
       val payload = (1 to nCols).flatMap { i =>
         val name = names(i - 1)
         if (name.equalsIgnoreCase(cursorCol) || opCol.exists(_.equalsIgnoreCase(name))) None
-        else Some(s""""${jsonEscape(name.toLowerCase)}":${jsonValue(rs, i)}""")
+        else Some(s"""${jsonString(name.toLowerCase)}:${jsonValue(rs, i)}""")
       }.mkString("{", ",", "}")
       val (after, before) = if (op == "d") ("null", payload) else (payload, "null")
       // ts_ms doubles as the event-time; the cursor is the source position analog
@@ -88,13 +88,8 @@ final class SpoolTailWriter(
       // one immutable file per non-empty poll; zero-padded counter keeps the sort order
       val name = f"$filePrefix%s_$fileNo%06d.jsonl"
       fileNo += 1
-      Files.createDirectories(Paths.get(spoolDir))
-      // write-then-rename so the source never sees a half-written file
-      val tmp = Paths.get(spoolDir, s".$name.tmp")
-      Files.write(tmp, batch.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-      Files.move(tmp, Paths.get(spoolDir, name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      // the source never sees a half-written file: its `.tmp` sibling is no `.jsonl`
+      AtomicFile.write(s"$spoolDir/$name", batch.mkString("", "\n", "\n"))
       lastCursor = maxCursor
     }
   }
@@ -105,18 +100,7 @@ final class SpoolTailWriter(
     else obj match {
       case n: java.lang.Number => n.toString
       case b: java.lang.Boolean => b.toString
-      case other => "\"" + jsonEscape(other.toString) + "\""
+      case other => jsonString(other.toString)
     }
-  }
-
-  private def jsonEscape(s: String): String = {
-    val sb = new StringBuilder
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import graft.operators.Cdc
-import graft.sinks.CsvManifestSink
+import graft.operators.{Cdc, StagingCatalog}
+import graft.sinks.{AtomicFile, CsvManifestSink}
 
 /**
  * Bounded CDC run: `cdc-spool` micro-batch stream → per-table staging with dynamic schema →
@@ -122,11 +122,9 @@ object CdcRunner {
       snapshotTsMs: Long = System.currentTimeMillis(),
       stats: SyncStats = new SyncStats): RunResult = {
     import graft.sources.JdbcSnapshot
-    val dedupes = cfg.loadType
-      .map(lt => lt == "full_load" || lt == "incremental_load")
-      .getOrElse(cfg.mode == "dedupe")
+    val (dedupe, _) = loadPolicy(cfg)
     val mode = JdbcSnapshot.effectiveMode(
-      JdbcSnapshot.parseMode(snapshotMode), isFirstRun, dedupe = dedupes)
+      JdbcSnapshot.parseMode(snapshotMode), isFirstRun, dedupe = dedupe)
     val stagingRoot = s"${cfg.workDir}/staging"
     val registry = new SchemaRegistry(s"${cfg.workDir}/schemas.json")
     if (mode.doSnapshot && snapshots.nonEmpty) {
@@ -163,12 +161,12 @@ object CdcRunner {
     val aligned = acc.foldLeft(renamed) { case (d, (n, t)) =>
       if (d.columns.contains(n)) d else d.withColumn(n, lit(null).cast(t))
     }.select(acc.map { case (n, t) => col(s"`$n`").cast(t).as(n) }: _*)
-    aligned
+    val staged = aligned
       .withColumn(Cdc.OpCol, lit("r"))
       .withColumn(Cdc.TsCol, lit(tsMs))
       .withColumn(Cdc.DeletedCol, lit("false"))
       .withColumn(Cdc.OrderCol, lit(-1L))
-      .write.mode("append").parquet(s"$stagingRoot/${Cdc.safeTableId(src.table)}")
+    StagingCatalog.append(staged, stagingRoot, Cdc.safeTableId(src.table))
   }
 
   private def stagingType(t: DataType): DataType = t match {
@@ -187,6 +185,7 @@ object CdcRunner {
       stats: SyncStats = new SyncStats): RunResult = {
     require(!(cfg.readOnly && cfg.signalTable.nonEmpty),
       "read-only mode: source-table signal channel is not available, use the file channel")
+    loadPolicy(cfg) // an unknown mode or load type fails here, before any write
     val stagingRoot = s"${cfg.workDir}/staging"
     val registry = new SchemaRegistry(s"${cfg.workDir}/schemas.json") // E4 carryover
     val signalTableId = cfg.signalTable.map(Cdc.safeTableId)
@@ -285,7 +284,7 @@ object CdcRunner {
 
     // ---- post-process: union-of-epochs read, dedupe policy, export (SURVEY §3.1 steps 8-9)
     // the signal table is control-channel plumbing, never an output table
-    val tableNames = graft.operators.StagingCatalog.tables(stagingRoot)
+    val tableNames = StagingCatalog.tables(stagingRoot)
       .filterNot(t => signalTableId.contains(t))
     val results = exportTables(spark, stagingRoot, tableNames, cfg)
     val counts = results.map(r => r.table -> r.rows).toMap
@@ -295,6 +294,20 @@ object CdcRunner {
       Map(graft.sinks.OffsetStore.spoolOffsetEntry("graft", "spool", lastPos)))
     CsvManifestSink.writeState(cfg.outDir, lastPos, schemas, Some(offsetBlob))
     RunResult(counts, lastPos, cfg.outDir, stats.snapshot)
+  }
+
+  /** The (dedupe, incremental) axes of the reference's four `load_type`s: `loadType`
+    * when set, else `mode` ("dedupe" = incremental_load, "append" = append_full).
+    * Throws `IllegalArgumentException` on an unknown `mode` or `loadType`. */
+  private def loadPolicy(cfg: RunConfig): (Boolean, Boolean) = {
+    require(cfg.mode == "dedupe" || cfg.mode == "append", s"unknown mode '${cfg.mode}'")
+    cfg.loadType.getOrElse(if (cfg.mode == "dedupe") "incremental_load" else "append_full") match {
+      case "full_load"          => (true, false)
+      case "incremental_load"   => (true, true)
+      case "append_incremental" => (false, true)
+      case "append_full"        => (false, false)
+      case other => throw new IllegalArgumentException(s"unknown load_type '$other'")
+    }
   }
 
   private[graft] final case class TableExport(table: String, rows: Long, maxPos: Long,
@@ -319,14 +332,9 @@ object CdcRunner {
       tableNames: Seq[String], cfg: RunConfig): Seq[TableExport] = {
     val outTables = s"${cfg.outDir}/tables"
     val orderOut = Cdc.OutputRenames(Cdc.OrderCol)
-    val loadType = cfg.loadType.getOrElse(
-      if (cfg.mode == "dedupe") "incremental_load" else "append_full")
-    require(Set("full_load", "incremental_load", "append_incremental", "append_full")(loadType),
-      s"unknown load_type '$loadType'")
-    val dedupe = loadType == "full_load" || loadType == "incremental_load"
-    val incremental = loadType == "incremental_load" || loadType == "append_incremental"
+    val (dedupe, incremental) = loadPolicy(cfg)
     concurrently(tableNames) { table =>
-      val staged = spark.read.option("mergeSchema", "true").parquet(s"$stagingRoot/$table")
+      val staged = StagingCatalog.table(spark, stagingRoot, table)
       val deduped =
         if (dedupe)
           Cdc.dedupeLastWins(staged, cfg.primaryKeys.getOrElse(table, Seq.empty))
@@ -478,8 +486,7 @@ object CdcRunner {
       // re-runs) or already saved after its retype — saving first could strand staged
       // history at the old type, and that parquet would never merge with the new chunks
       for ((table, rewrite, widened) <- plans if rewrite)
-        graft.operators.StagingCatalog.retype(spark, stagingRoot, Cdc.safeTableId(table),
-          widened.toMap)
+        StagingCatalog.retype(spark, stagingRoot, Cdc.safeTableId(table), widened.toMap)
       registry.put(plans.map { case (table, _, widened) => table -> widened })
       concurrently(plans) { case (table, _, widened) =>
         val payloadCols = widened.map { case (k, t) => element_at(col("p"), k).cast(t).as(k) }
@@ -488,8 +495,8 @@ object CdcRunner {
           col("ts_ms").as(Cdc.TsCol),
           when(col("op") === "d", lit("true")).otherwise(lit("false")).as(Cdc.DeletedCol),
           col("pos").as(Cdc.OrderCol))
-        spooled.filter(col("table") === table).select(payloadCols ++ sysCols: _*)
-          .write.mode("append").parquet(s"$stagingRoot/${Cdc.safeTableId(table)}")
+        StagingCatalog.append(spooled.filter(col("table") === table)
+          .select(payloadCols ++ sysCols: _*), stagingRoot, Cdc.safeTableId(table))
       }
     } finally cached.unpersist()
   }
@@ -547,19 +554,14 @@ object CdcRunner {
         e.getKey -> cols
       }.toMap
     }
+    /** Atomic: a crash mid-write keeps the previous registry loadable. */
     private def save(): Unit = {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      val json = cache.toSeq.sortBy(_._1).map { case (t, cols) =>
-        q(t) + ": [" + cols.map { case (n, dt) =>
-          s"{${q("name")}: ${q(n)}, ${q("type")}: ${q(dt.sql)}}"
-        }.mkString(", ") + "]"
-      }.mkString("{", ", ", "}")
-      java.nio.file.Files.createDirectories(file.getParent)
-      // temp file + atomic rename: a crash mid-write keeps the previous registry loadable
-      val tmp = file.resolveSibling("." + file.getFileName.toString + ".tmp")
-      java.nio.file.Files.writeString(tmp, json)
-      java.nio.file.Files.move(tmp, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      import CsvManifestSink.jsonString
+      AtomicFile.write(path, cache.toSeq.sortBy(_._1).map { case (t, cols) =>
+        jsonString(t) + ": " + cols.map { case (n, dt) =>
+          s"""{"name": ${jsonString(n)}, "type": ${jsonString(dt.sql)}}"""
+        }.mkString("[", ", ", "]")
+      }.mkString("{", ", ", "}"))
     }
   }
 
@@ -599,7 +601,7 @@ object CdcRunner {
           .filter(e => filters.admits(table, e.field))
         val rows = EnvelopeDecoder.decodePayload(sub, "value", elements, passthrough = Seq("pos"))
           .withColumnRenamed("pos", Cdc.OrderCol)
-        rows.write.mode("append").parquet(s"$stagingRoot/$tid")
+        StagingCatalog.append(rows, stagingRoot, tid)
       }
     } finally spooled.unpersist()
   }

@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions.col
 object IncrementalBqIndex {
 
   /** Committed waves: `w=<id>` dirs whose `_SUCCESS` landed. */
-  private[streaming] def waves(spark: SparkSession, indexDir: String): Seq[Long] =
+  private def waves(spark: SparkSession, indexDir: String): Seq[Long] =
     new BatchState.Versions(BatchState.fsOf(spark, indexDir), indexDir, "w=").committed
 
   /** Committed compactions: `c=<id>` covers every wave ≤ id. */

@@ -37,10 +37,13 @@ object IncrementalSemDedup {
   private def vecDir(d: String) = s"$d/vec"
   private def idxDir(d: String) = s"$d/index"
 
-  /** The admitted vectors at the newest committed state: vec waves whose INDEX
-    * wave committed (the index commit is the batch commit point). */
+  /** The admitted vectors at the newest committed state: vec waves up to the newest
+    * batch the INDEX applied (the index commit is the batch commit point; a compaction
+    * sweeps index waves, never vec waves). */
   def admitted(spark: SparkSession, storeDir: String): DataFrame = {
-    val ws = IncrementalBqIndex.waves(spark, idxDir(storeDir))
+    val applied = IncrementalBqIndex.applied(spark, idxDir(storeDir))
+    val ws = new BatchState.Versions(BatchState.fsOf(spark, storeDir), vecDir(storeDir), "w=")
+      .committed.filter(w => applied.exists(w <= _))
     if (ws.isEmpty) throw new IllegalStateException(s"no admitted state at $storeDir")
     ws.map(w => spark.read.parquet(s"${vecDir(storeDir)}/w=$w")).reduce(_ unionByName _)
   }

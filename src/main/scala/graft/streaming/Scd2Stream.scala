@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -75,44 +75,39 @@ object Scd2Stream {
    * warehouse uses when the history table must be a queryable parquet artifact between
    * micro-batches (the state-based [[scd2]] keeps it inside the checkpoint).
    *
-   * Layout under `dir`: `current/` (the history parquet), `_applied_<batchId>` marker
-   * files. Replay-safe: foreachBatch re-delivers the last uncommitted batch after a
-   * restart, so a batch id at or below the recorded maximum is skipped (the
-   * [[IngestDedup]] marker idiom). The swap (write `next/` → delete `current/` →
-   * rename) has the same documented non-atomic window as index compaction: a crash
-   * between delete and rename leaves the full merged copy in `next/` for restore.
-   * First batch bootstraps with [[graft.operators.Cdc.scd2History]].
+   * Layout under `dir`: one [[BatchState.Versions]] history per batch, `v=<batchId>`,
+   * committed by its `_SUCCESS`; [[current]] reads the newest. Batch b merges the newest
+   * committed version below b (the first batch bootstraps with
+   * [[graft.operators.Cdc.scd2History]]) and the prune keeps two versions, so a kill at
+   * any point leaves the predecessor for the replay to merge again. A batch id at or
+   * below the newest committed version is skipped; an empty batch writes nothing.
    */
   def mergeBatchSink(dir: String, keys: Seq[String], attr: String,
       orderCols: Seq[String]): (DataFrame, Long) => Unit = (batch, batchId) => {
     val spark = batch.sparkSession
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val applied =
-      if (!fs.exists(base)) None
-      else fs.listStatus(base).iterator.map(_.getPath.getName)
-        .collect { case n if n.startsWith("_applied_") => n.stripPrefix("_applied_").toLong }
-        .maxOption
-    if (applied.forall(_ < batchId)) {
-      val current = new org.apache.hadoop.fs.Path(base, "current")
-      val next = new org.apache.hadoop.fs.Path(base, "next")
-      if (batch.isEmpty) { // nothing to merge; still record progress
-        fs.mkdirs(base)
-        fs.create(new org.apache.hadoop.fs.Path(base, s"_applied_$batchId"), true).close()
-      } else {
-        val merged =
-          if (fs.exists(current))
-            graft.operators.Cdc.scd2Merge(
-              spark.read.parquet(current.toString), batch, keys, attr, orderCols)
-          else graft.operators.Cdc.scd2History(batch, keys, attr, orderCols)
-        fs.delete(next, true)
-        merged.write.mode("overwrite").parquet(next.toString)
-        fs.delete(current, true)
-        fs.rename(next, current)
-        fs.create(new org.apache.hadoop.fs.Path(base, s"_applied_$batchId"), true).close()
+    val versions = historyOf(spark, dir)
+    if (versions.newest.forall(_ < batchId) && !batch.isEmpty) {
+      val merged = versions.prior(batchId) match {
+        case Some(p) => graft.operators.Cdc.scd2Merge(
+          spark.read.parquet(versions.path(p)), batch, keys, attr, orderCols)
+        case None => graft.operators.Cdc.scd2History(batch, keys, attr, orderCols)
       }
+      merged.write.mode("overwrite").parquet(versions.path(batchId))
+      versions.prune()
     }
   }
+
+  /** The history a [[mergeBatchSink]] maintains under `dir`, at its newest committed
+    * version. */
+  def current(spark: SparkSession, dir: String): DataFrame = {
+    val versions = historyOf(spark, dir)
+    val v = versions.newest.getOrElse(
+      throw new IllegalStateException(s"no committed SCD2 history at $dir"))
+    spark.read.parquet(versions.path(v))
+  }
+
+  private def historyOf(spark: SparkSession, dir: String) =
+    new BatchState.Versions(BatchState.fsOf(spark, dir), dir, "v=")
 
   /** Convenience: run over a cdc-spool of envelopes carrying
     * `{"after":{"user_id":..,"event_type":..},"source":{"ts_ms":..}}`. */

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import graft.sinks.AtomicFile
+import graft.sinks.CsvManifestSink.jsonString
 
 /**
  * S5 / §2.7: the `execute-snapshot` signal protocol, both channels
@@ -32,12 +34,10 @@ object Signals {
   /** Write an execute-snapshot signal to the file channel (the shape of
     * `SnapshotSignal.as_dict`, `executor.py:28-30`). */
   def writeSignalFile(path: String, tables: Seq[String], id: String,
-      snapshotType: String = "BLOCKING"): Unit = {
-    def q(s: String) = "\"" + CsvEscape.json(s) + "\""
-    val json = s"""{"id": ${q(id)}, "type": "execute-snapshot", "data": {"type": ${q(snapshotType)}, "data-collections": ${tables.map(q).mkString("[", ", ", "]")}}}"""
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    Files.writeString(Paths.get(path), json)
-  }
+      snapshotType: String = "BLOCKING"): Unit =
+    AtomicFile.write(path, s"""{"id": ${jsonString(id)}, "type": "execute-snapshot", """ +
+      s""""data": {"type": ${jsonString(snapshotType)}, "data-collections": """ +
+      s"""${tables.map(jsonString).mkString("[", ", ", "]")}}}""")
 
   /** Parse the file channel if a signal is present; non-`execute-snapshot` types ignored. */
   def readSignalFile(path: String): Option[SnapshotSignal] = {
@@ -63,7 +63,7 @@ object Signals {
       processed: Set[String] = Set.empty): Seq[SnapshotSignal] = {
     if (!graft.operators.StagingCatalog.tables(stagingRoot).contains(signalTableId)) return Nil
     import org.apache.spark.sql.functions.col
-    spark.read.option("mergeSchema", "true").parquet(s"$stagingRoot/$signalTableId")
+    graft.operators.StagingCatalog.table(spark, stagingRoot, signalTableId)
       .filter(col("type") === "execute-snapshot")
       .select("id", "data").collect().toSeq
       .map(r => parseSignal(r.getString(0), mapper.readTree(r.getString(1))))
@@ -86,8 +86,8 @@ object Signals {
   }
 
   /** Record signal ids as processed (called only after the backfill staged successfully).
-    * Written via temp-file + atomic rename: this file gates re-backfills, so a crash
-    * mid-write must never leave a truncated JSON that fails every subsequent run.
+    * Written through [[AtomicFile]]: this file gates re-backfills, so a crash mid-write
+    * must never leave a truncated JSON that fails every subsequent run.
     *
     * At-least-once window (ADVICE r3, documented contract): the backfill's staging append
     * and this record are two writes — a crash between them re-resolves the signal and
@@ -98,13 +98,7 @@ object Signals {
   def markProcessed(path: String, ids: Set[String]): Unit = {
     if (ids.isEmpty) return
     val all = (loadProcessedIds(path) ++ ids).toSeq.sorted
-    def q(s: String) = "\"" + CsvEscape.json(s) + "\""
-    val target = Paths.get(path)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    val tmp = target.resolveSibling("." + target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, all.map(q).mkString("[", ", ", "]"))
-    Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    AtomicFile.write(path, all.map(jsonString).mkString("[", ", ", "]"))
   }
 
   /** Retire a consumed file-channel signal: rename aside with the signal id in the name,
@@ -115,18 +109,5 @@ object Signals {
     if (Files.exists(p))
       Files.move(p, p.resolveSibling(p.getFileName.toString + ".consumed" + suffix),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-}
-
-/** Minimal JSON string escaping shared by driver-side writers. */
-private[streaming] object CsvEscape {
-  def json(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
   }
 }

@@ -96,4 +96,22 @@ class AtomicSwapSpec extends SparkSpec {
       "a finished-swap tmp must never delete surviving data files")
     assert(!f2.exists(tmp2))
   }
+
+  test("a failed rename stops the swap before any delete; the next finish completes it") {
+    val (f, store, olds, renames) = freshSwap("rename-fails")
+    intercept[java.io.IOException](AtomicSwap.finishSwap(renamesFailAfter(f, 0)(false), store))
+    assert(stateOf(f, store) == olds.toSet + "_batch_7", "old data must survive a failed rename")
+    assert(f.exists(new Path(new Path(store, AtomicSwap.TmpName), AtomicSwap.ManifestName)))
+    AtomicSwap.finishSwap(f, store)
+    assert(stateOf(f, store) == renames.map(_._2).toSet + "_batch_7")
+  }
+
+  test("a kill while finishing a complete manifest-less tmp loses nothing on the next finish") {
+    val (f, store, _, renames) = freshSwap("legacy-killed")
+    f.delete(new Path(new Path(store, AtomicSwap.TmpName), AtomicSwap.ManifestName), false)
+    intercept[IllegalStateException](AtomicSwap.finishSwap(
+      renamesFailAfter(f, 1)(throw new IllegalStateException("killed")), store))
+    AtomicSwap.finishSwap(f, store)
+    assert(stateOf(f, store) == renames.map(_._2).toSet + "_batch_7")
+  }
 }

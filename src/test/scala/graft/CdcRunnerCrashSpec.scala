@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, DoubleType}
+import graft.operators.StagingCatalog
+import graft.sinks.AtomicSwap
 import graft.streaming.CdcRunner
 import graft.streaming.CdcRunner.RunConfig
 
@@ -260,5 +265,90 @@ class CdcRunnerCrashSpec extends SparkSpec {
         Files.write(part.toPath, bytes.take(math.max(1, bytes.length / 2))): Unit
     }
     assert(got == g, s"full-rollback window diverged from golden:\n got=$got\n gold=$g")
+  }
+
+  /** Two syncs of one table; run 2 stages `{"id":3,"v":<v3>}`. With the default `v3` it
+    * widens `v` from BIGINT to DOUBLE, so run 2 rewrites run 1's staged history
+    * (`StagingCatalog.retype`) before it appends. `kill` gets the staged table dir after
+    * run 1 and leaves it as a kill inside a rewrite of it would (for a retype: the
+    * registry is still run 1's, the checkpoint still at batch 0). Returns the outDir
+    * snapshot after run 2 and the staged type of `v`. */
+  private def widenChain(base: String, v3: String = "1.5")(
+      kill: String => Unit): (Map[String, Seq[String]], DataType) = {
+    val spool = s"$base/spool"
+    val staging = s"$base/work/staging"
+    val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+      primaryKeys = Map("t_t1" -> Seq("id")))
+    writeSpool(spool, "000.jsonl", Seq(
+      env("t.t1", "c", """{"id":1,"v":10}""", null, 1),
+      env("t.t1", "c", """{"id":2,"v":20}""", null, 2)))
+    CdcRunner.run(spark, cfg)
+    writeSpool(spool, "001.jsonl", Seq(env("t.t1", "c", s"""{"id":3,"v":$v3}""", null, 3)))
+    kill(s"$staging/t_t1")
+    CdcRunner.run(spark, cfg)
+    (snapshotOut(s"$base/out"), StagingCatalog.tableSchema(spark, staging, "t_t1")("v").dataType)
+  }
+
+  private lazy val widenGolden: Map[String, Seq[String]] = {
+    val (g, vType) = widenChain(Files.createTempDirectory("graft-crash-widen-golden").toString)(_ => ())
+    // non-vacuous: the golden holds every id at the widened type
+    val rows = g.collectFirst { case (k, v) if k.endsWith("t_t1.csv") => v }.getOrElse(Nil)
+    assert(rows.map(_.takeWhile(_ != ',')) == Seq("1", "2", "3"), s"golden rows: $rows")
+    assert(rows.exists(_.startsWith("3,1.5,")) && vType == DoubleType, s"golden rows: $rows")
+    g
+  }
+
+  /** Run 1's staged rows with `v` cast to DOUBLE, as `retype` writes them, completed
+    * under `<table>/_compact_tmp`, one file per row. */
+  private def writeRetypeTmp(table: String): Path = {
+    val df = spark.read.parquet(table)
+    df.select(df.columns.map(c => if (c == "v") col(c).cast(DoubleType).as(c) else col(c)): _*)
+      .coalesce(1).write.option("maxRecordsPerFile", 1L).parquet(s"$table/${AtomicSwap.TmpName}")
+    new Path(table, AtomicSwap.TmpName)
+  }
+
+  private def parquetsIn(fs: FileSystem, dir: Path): Seq[String] =
+    fs.listStatus(dir).map(_.getPath.getName).filter(_.endsWith(".parquet")).toSeq
+
+  test("kill inside retype after the rewrite completed, before its swap manifest: next sync matches golden") {
+    val g = widenGolden
+    val (got, vType) = widenChain(Files.createTempDirectory("graft-crash-widenA").toString) { table =>
+      val tmp = writeRetypeTmp(table)
+      val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.exists(new Path(tmp, "_SUCCESS")) && !fs.exists(new Path(tmp, AtomicSwap.ManifestName)))
+    }
+    assert(got == g, s"kill before the swap manifest diverged from golden:\n got=$got\n gold=$g")
+    assert(vType == DoubleType)
+  }
+
+  test("kill inside retype's swap after the manifest and some renames: next sync matches golden") {
+    val g = widenGolden
+    val (got, vType) = widenChain(Files.createTempDirectory("graft-crash-widenB").toString) { table =>
+      val tmp = writeRetypeTmp(table)
+      val store = tmp.getParent
+      val local = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // the kill lands on the swap's second rename
+      intercept[IllegalStateException](AtomicSwap.commitSwap(
+        renamesFailAfter(local, 1)(throw new IllegalStateException("killed")), store))
+      assert(local.exists(new Path(tmp, AtomicSwap.ManifestName)))
+      assert(parquetsIn(local, tmp).size == 1, "one of the two renames must be left")
+      assert(parquetsIn(local, store).count(_.startsWith("compact-")) == 1)
+    }
+    assert(got == g, s"kill mid-swap diverged from golden:\n got=$got\n gold=$g")
+    assert(vType == DoubleType)
+  }
+
+  test("kill inside compact before its swap manifest, then a sync that appends: no staged row lost") {
+    val (g, _) = widenChain(Files.createTempDirectory("graft-crash-compact-golden").toString,
+      v3 = "30")(_ => ())
+    val rows = g.collectFirst { case (k, v) if k.endsWith("t_t1.csv") => v }.getOrElse(Nil)
+    assert(rows.map(_.takeWhile(_ != ',')) == Seq("1", "2", "3"), s"golden rows: $rows")
+    val (got, _) = widenChain(Files.createTempDirectory("graft-crash-compact").toString,
+      v3 = "30") { table =>
+      // `compact`'s rewrite of run 1's rows, complete but never committed: run 2 appends
+      // id 3 to the table while this stale tmp sits in it
+      spark.read.parquet(table).coalesce(1).write.parquet(s"$table/${AtomicSwap.TmpName}")
+    }
+    assert(got == g, s"an uncommitted compact diverged from golden:\n got=$got\n gold=$g")
   }
 }

@@ -270,4 +270,35 @@ class JdbcEndToEndSpec extends SparkSpec {
     assert(csv.count(_.nonEmpty) == 10)
     assert(!csv.exists(_.contains("CHANGED"))) // stream event was not consumed
   }
+
+  test("a snapshot staged next to an uncommitted staging rewrite survives the export") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import graft.sinks.AtomicSwap
+    import graft.streaming.CdcRunner
+    import graft.streaming.CdcRunner.{RunConfig, SnapshotSource}
+    conn.createStatement().execute("CREATE TABLE SWAPT(ID INT NOT NULL PRIMARY KEY, V INT)")
+    Seq(10, 11).foreach(i => conn.createStatement().execute(s"INSERT INTO SWAPT VALUES ($i, $i)"))
+    val base = Files.createTempDirectory("graft-snapswap").toString
+    val spool = s"$base/spool"
+    Files.createDirectories(Paths.get(spool))
+    Files.write(Paths.get(spool, "000.jsonl"), Seq(1, 2).map(i =>
+      s"""{"table":"app.swapt","op":"c","after":{"id":$i,"v":$i},"before":null,"source":{"ts_ms":$i}}""").asJava)
+    val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+      primaryKeys = Map("app_swapt" -> Seq("id")))
+    CdcRunner.run(spark, cfg)
+    // a rewrite of the streamed rows (a retype or compact killed before its swap
+    // manifest), complete but never committed; the snapshot then appends beside it
+    val table = s"$base/work/staging/app_swapt"
+    spark.read.parquet(table).coalesce(1).write.parquet(s"$table/${AtomicSwap.TmpName}")
+    val res = CdcRunner.runWithSnapshot(spark, cfg, snapshotMode = "initial",
+      snapshots = Seq(SnapshotSource("app.swapt",
+        SnapshotConfig(url, "APP.SWAPT", driver = Some(DerbyDriver)))),
+      isFirstRun = false, snapshotTsMs = 1000L)
+    assert(res.tables == Map("app_swapt" -> 4L))
+    val ids = Option(new java.io.File(s"$base/out/tables/app_swapt.csv").listFiles()).get
+      .filter(_.getName.endsWith(".csv"))
+      .flatMap(f => Files.readAllLines(f.toPath).asScala).map(_.takeWhile(_ != ',')).sorted
+    assert(ids.toSeq == Seq("1", "10", "11", "2"))
+  }
 }

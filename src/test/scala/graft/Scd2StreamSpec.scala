@@ -103,7 +103,7 @@ class Scd2StreamSpec extends SparkSpec {
     writeFile("002.json", Seq((8L, "y", 5000L, 7L), (7L, "c", 6000L, 8L), (10L, "z", 5500L, 9L)),
       3000000L)
     run()
-    def snapshot() = spark.read.parquet(s"$hist/current").collect()
+    def snapshot() = Scd2Stream.current(spark, hist).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[String]("event_type"),
         r.getAs[Long]("valid_from"), Option(r.getAs[java.lang.Long]("valid_to")).map(_.longValue),
         r.getAs[Boolean]("is_current"), r.getAs[Long]("version")))
@@ -127,5 +127,27 @@ class Scd2StreamSpec extends SparkSpec {
     // and an idle restart (no new files) leaves it untouched too
     run()
     assert(snapshot() == expected)
+  }
+
+  test("mergeBatchSink: a kill while a batch's version is written converges on replay") {
+    import spark.implicits._
+    def batch(rows: (Long, String, Long, Long)*) = rows.toDF("user_id", "event_type", "ms", "event_id")
+    val (b0, b1) = (batch((7L, "a", 1000L, 1L), (8L, "x", 1500L, 2L)), batch((7L, "b", 2000L, 3L)))
+    def sink(dir: String) =
+      Scd2Stream.mergeBatchSink(dir, Seq("user_id"), "event_type", Seq("ms", "event_id"))
+    def history(dir: String) = Scd2Stream.current(spark, dir).collect().map(_.toString).sorted.toSeq
+    val base = Files.createTempDirectory("graft-scd2kill").toString
+    val (clean, killed) = (s"$base/clean", s"$base/killed")
+    Seq(clean, killed).foreach(d => sink(d)(b0, 0L))
+    sink(clean)(b1, 1L)
+    // the kill: batch 1's version holds a partial write and no _SUCCESS
+    b1.write.parquet(s"$killed/v=1")
+    Files.delete(Paths.get(killed, "v=1", "_SUCCESS"))
+    assert(history(killed).size == 2, "the uncommitted version must stay invisible")
+    sink(killed)(b1, 1L) // the replay
+    assert(history(killed) == history(clean),
+      s"replay diverged:\n${history(killed)}\nvs\n${history(clean)}")
+    // [7,a,closed,v1] [7,b,open,v2] [8,x,open,v1]
+    assert(history(clean).size == 3)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +9,16 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites; JVM exit cleans up
+
+  /** `f` whose renames after the first `ok` end in `fail` (false, or a throw for a kill). */
+  def renamesFailAfter(f: FileSystem, ok: Int)(fail: => Boolean): FileSystem =
+    new FilterFileSystem(f) {
+      private var n = 0
+      override def rename(src: Path, dst: Path): Boolean = {
+        n += 1
+        if (n > ok) fail else super.rename(src, dst)
+      }
+    }
 }
 
 object SparkSpec {

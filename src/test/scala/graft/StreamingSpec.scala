@@ -1341,6 +1341,50 @@ class StreamingSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("incremental semantic dedup: admission after an index compaction matches an uncompacted twin") {
+    import graft.streaming.{IncrementalSemDedup, IncrementalBqIndex}
+    import graft.ops.VectorOps
+    import org.apache.spark.sql.functions.{reverse, transform => atransform}
+    val e = spark.read.parquet(s"${sys.props("user.home")}/testdata/sf0.001/embeddings.parquet")
+      .localCheckpoint(true)
+    val cents = VectorOps.kmeansFit(e, 8, iters = 2)
+    val base = Files.createTempDirectory("graft-semdd-compact").toString
+    val (plain, compacted) = (s"$base/plain", s"$base/compacted")
+    def shifted(df: org.apache.spark.sql.DataFrame, by: Long) =
+      df.withColumn("vec_id", col("vec_id") + lit(by))
+    val waves = Seq(e, shifted(e, 1000000L),
+      shifted(e, 2000000L).withColumn("embedding", atransform(col("embedding"), x => (-x).cast("float"))))
+    for ((w, b) <- waves.zipWithIndex; dir <- Seq(plain, compacted))
+      IncrementalSemDedup.applyBatch(w, b.toLong, dir, cents, eps = 0.9)
+    assert(IncrementalBqIndex.compact(spark, s"$compacted/index") > 0)
+    // wave 3: verbatim copies of admitted vectors (rejected) + reversed, new vectors
+    val w3 = shifted(e.filter(col("vec_id") % 2 === 0), 3000000L)
+      .unionByName(shifted(e.filter(col("vec_id") % 2 === 1), 4000000L)
+        .withColumn("embedding", reverse(col("embedding"))))
+    val nPlain = IncrementalSemDedup.applyBatch(w3, 3L, plain, cents, eps = 0.9)
+    val nCompacted = IncrementalSemDedup.applyBatch(w3, 3L, compacted, cents, eps = 0.9)
+    assert(nCompacted == nPlain && nPlain > 0, s"compacted $nCompacted vs plain $nPlain")
+    assert(IncrementalSemDedup.admitted(spark, compacted).count() ==
+      IncrementalSemDedup.admitted(spark, plain).count())
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+  }
+
+  test("an unknown mode or load type fails before any write") {
+    val base = Files.createTempDirectory("graft-loadtype").toString
+    writeSpool(s"$base/spool", "000.jsonl", Seq(env("l.t", "c", """{"id":1}""", null, 1)))
+    val ok = RunConfig(spoolDir = s"$base/spool", workDir = "", outDir = s"$base/out")
+    val cases = Seq(ok.copy(mode = "dedup"), ok.copy(loadType = Some("full")))
+    for ((cfg, i) <- cases.zipWithIndex; viaSnapshot <- Seq(false, true)) {
+      val work = s"$base/work_${i}_$viaSnapshot"
+      val c = cfg.copy(workDir = work)
+      intercept[IllegalArgumentException] {
+        if (viaSnapshot) CdcRunner.runWithSnapshot(spark, c, "initial", Nil) else CdcRunner.run(spark, c)
+      }
+      assert(!Files.exists(Paths.get(work, "checkpoint")) && !Files.exists(Paths.get(work, "staging")),
+        s"${if (viaSnapshot) "runWithSnapshot" else "run"} wrote before rejecting $cfg")
+    }
+  }
+
   test("adaptive grouping-sets MV: flat below threshold, one-way migration, equivalent at every boundary") {
     import graft.streaming.{AdaptiveGroupingSetsMv => A, GroupingSetsMv}
     import org.apache.hadoop.fs.Path
