@@ -15,12 +15,12 @@ import graft.sinks.{AtomicFile, CsvManifestSink}
  * `ex_postgres_cdc/src/component.py:80-152`):
  *  - one finite streaming run per invocation (`Trigger.AvailableNow`, offset cap in the
  *    source) — the reference's run-until-stop-condition model (`AbstractDebeziumTask.java:97-130`);
- *  - per micro-batch, each envelope is parsed ONCE and its chosen state map-parsed; events
- *    are grouped by table and appended to a staging parquet dir typed by a per-table schema accumulated across
- *    batches and runs in first-seen column order (E1–E4) — `mergeSchema` on readback
- *    replaces the reference's chunk tables + `ALTER TABLE ADD COLUMN`, and numeric type
- *    drift widens the accumulated schema (rewriting staged history once) instead of
- *    producing unmergeable chunks;
+ *  - every input — routed envelopes (parsed ONCE, chosen state map-parsed), wire events
+ *    (typed by their own schema block) and JDBC snapshots — ends in one staging tail: a
+ *    per-table schema accumulates across batches and runs in first-seen column order
+ *    (E1–E4), type drift widens it (rewriting staged history once) instead of producing
+ *    unmergeable chunks, and `mergeSchema` on readback replaces the reference's chunk
+ *    tables + `ALTER TABLE ADD COLUMN`;
  *  - post-processing dedupes on `kbc__batch_event_order` := the source's global arrival
  *    position (a true total order, unlike `monotonically_increasing_id`) and exports
  *    CSV/manifest/state (K2–K7).
@@ -129,8 +129,8 @@ object CdcRunner {
     val registry = new SchemaRegistry(s"${cfg.workDir}/schemas.json")
     if (mode.doSnapshot && snapshots.nonEmpty) {
       stats.setSnapshotInProgress(true)
-      try snapshots.foreach(s => stageSnapshot(spark, s, stagingRoot, registry, snapshotTsMs,
-        filtersOf(cfg)))
+      try stage(spark, stagingRoot, registry,
+        snapshots.map(snapshotInput(spark, _, snapshotTsMs, filtersOf(cfg))))
       finally stats.setSnapshotInProgress(false)
     }
     // a no-stream mode still runs the full post-processing/export: a zero-byte position
@@ -140,43 +140,28 @@ object CdcRunner {
     run(spark, streamCfg, stats)
   }
 
-  /** Stage one snapshot read as staging rows: column names lowercased to the envelope
+  /** One snapshot read as staging input: column names lowercased to the envelope
     * convention, types normalized to the staging type system (integrals → BIGINT,
     * fractionals → DOUBLE, decimals → exact STRING rendering per
     * decimal.handling.mode=string, dates/timestamps/nested → STRING), system columns
     * `op=r`, snapshot ts, order −1 (< any stream byte position). */
-  private def stageSnapshot(spark: SparkSession, src: SnapshotSource, stagingRoot: String,
-      registry: SchemaRegistry, tsMs: Long,
-      filters: ColumnFilters = ColumnFilters()): Unit = {
+  private def snapshotInput(spark: SparkSession, src: SnapshotSource, tsMs: Long,
+      filters: ColumnFilters): TableInput = {
     val df = graft.sources.JdbcSnapshot.read(spark, src.jdbc)
     // P3/P4 at the connector level (ADVICE r2): filtered columns never enter the
-    // accumulated schema, the staged parquet, or the export — same contract as stageEvents
-    val snapCols = df.schema.fields.map(f => f.name.toLowerCase -> stagingType(f.dataType))
-      .toSeq.filter { case (n, _) => filters.admits(src.table, n) }
-    val acc0 = registry.get(src.table)
-    val acc = if (acc0.isEmpty) snapCols
-      else acc0 ++ snapCols.filterNot(c => acc0.exists(_._1 == c._1))
-    registry.put(Seq(src.table -> acc))
-    val renamed = df.select(df.schema.fields.map(f => col(f.name).as(f.name.toLowerCase)): _*)
-    val aligned = acc.foldLeft(renamed) { case (d, (n, t)) =>
-      if (d.columns.contains(n)) d else d.withColumn(n, lit(null).cast(t))
-    }.select(acc.map { case (n, t) => col(s"`$n`").cast(t).as(n) }: _*)
-    val staged = aligned
-      .withColumn(Cdc.OpCol, lit("r"))
-      .withColumn(Cdc.TsCol, lit(tsMs))
-      .withColumn(Cdc.DeletedCol, lit("false"))
-      .withColumn(Cdc.OrderCol, lit(-1L))
-    StagingCatalog.append(staged, stagingRoot, Cdc.safeTableId(src.table))
+    // accumulated schema, the staged parquet, or the export — same contract as the stream
+    TableInput(src.table, df.schema.fields.map(f => f.name.toLowerCase -> stagingType(f.dataType))
+      .toSeq.filter { case (n, _) => filters.admits(src.table, n) },
+      df.select(df.schema.fields.map(f => col(f.name).as(f.name.toLowerCase)) ++ Seq(
+        lit("r").as(Cdc.OpCol), lit(tsMs).as(Cdc.TsCol), lit("false").as(Cdc.DeletedCol),
+        lit(-1L).as(Cdc.OrderCol)): _*))
   }
 
   private def stagingType(t: DataType): DataType = t match {
     case ByteType | ShortType | IntegerType | LongType => LongType
     case FloatType | DoubleType                        => DoubleType
-    case _: DecimalType                                => StringType
     case BooleanType                                   => BooleanType
-    case _: StructType | _: ArrayType | _: MapType     => StringType
-    case DateType | TimestampType                      => StringType
-    case other                                         => StringType
+    case _ => StringType // decimals (exact rendering), dates, timestamps, nested
   }
 
   /** `stats` is injectable so composed runs (snapshot→stream) and tests can flip the
@@ -208,10 +193,8 @@ object CdcRunner {
         .trigger(trigger)
         .option("checkpointLocation", s"${cfg.workDir}/checkpoint")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (cfg.wireFormat) stageWireEvents(spark, batch, stagingRoot, includeWithSignals,
-            filtersOf(cfg))
-          else stageEvents(spark, batch, stagingRoot, registry, only = includeWithSignals,
-            filtersOf(cfg))
+          stageEvents(spark, batch, stagingRoot, registry, cfg.wireFormat,
+            includeWithSignals, filtersOf(cfg))
         }
         .start()
       cfg.maxWaitMs match {
@@ -262,11 +245,8 @@ object CdcRunner {
     if (backfill.nonEmpty) {
       val batchDf = spark.read.format("graft.sources.CdcSpoolSource")
         .option("path", cfg.spoolDir).load()
-      val wanted = backfill.toSet
-      if (cfg.wireFormat) stageWireEvents(spark, batchDf, stagingRoot, Some(wanted),
-        filtersOf(cfg))
-      else stageEvents(spark, batchDf, stagingRoot, registry, only = Some(wanted),
-        filtersOf(cfg))
+      stageEvents(spark, batchDf, stagingRoot, registry, cfg.wireFormat,
+        Some(backfill.toSet), filtersOf(cfg))
     }
     if (signals.nonEmpty) { // backfill staged successfully: retire the signals
       // The processed-ids record lands only AFTER the backfill's staging append succeeded,
@@ -393,12 +373,18 @@ object CdcRunner {
     StructField("before", StringType),
     StructField("after", StringType)))
 
+  /** Stage a (pos, value) event batch: the `wireFormat` front-end types each table's rows,
+    * then [[stage]] accumulates, widens and appends them. */
+  private def stageEvents(spark: SparkSession, batch: DataFrame, stagingRoot: String,
+      registry: SchemaRegistry, wireFormat: Boolean, only: Option[Set[String]],
+      filters: ColumnFilters): Unit =
+    if (wireFormat) wireInputs(batch, only, filters)(stage(spark, stagingRoot, registry, _))
+    else routedInputs(spark, batch, registry, only, filters)(stage(spark, stagingRoot, registry, _))
+
   /**
-   * Group a (pos, value) event batch by table and append typed rows to staging parquet.
-   *
-   * Order-preserving, type-stable staging (VERDICT r1 #3 + ADVICE) in a job plan whose size
-   * does not grow with the table count — one metadata job, at most one inference job, a
-   * `retype` per widened table, one append per table:
+   * Routed-envelope front-end: group the batch by table and type each table's payload
+   * keys, in a job plan whose size does not grow with the table count — one metadata job
+   * and at most one inference job (VERDICT r1 #3 + ADVICE):
    *  - parse: the envelope is parsed ONCE, before/after kept as raw text, and the CHOSEN
    *    state's text is map-parsed; the batch is cached with that payload text;
    *  - metadata: ONE grouped aggregation over the cache, `groupBy(table, map_keys(p))`.
@@ -411,15 +397,10 @@ object CdcRunner {
    *  - inference: tables that introduce NEW columns (E1) share ONE `spark.read.json` job
    *    over their payloads, each wrapped under a per-table key. It sees quoting
    *    (decimal-as-string stays exact) and overrides the audit for every column it has a
-   *    type for;
-   *  - types accumulate in the [[SchemaRegistry]] across batches AND runs (E4); a widening
-   *    rewrites that table's staged history once ([[graft.operators.StagingCatalog.retype]])
-   *    so parquet chunks stay mergeable, the registry is saved, and only then do the
-   *    per-table appends run, concurrently.
+   *    type for.
    */
-  private def stageEvents(spark: SparkSession, batch: DataFrame, stagingRoot: String,
-      registry: SchemaRegistry, only: Option[Set[String]] = None,
-      filters: ColumnFilters = ColumnFilters()): Unit = {
+  private def routedInputs(spark: SparkSession, batch: DataFrame, registry: SchemaRegistry,
+      only: Option[Set[String]], filters: ColumnFilters)(tail: Seq[TableInput] => Unit): Unit = {
     import spark.implicits._
     val env = batch.select(col("pos"), from_json(col("value"), EnvelopeSchema).as("m"))
       .select(col("pos"), col("m.table").as("table"), col("m.op").as("op"),
@@ -470,61 +451,120 @@ object CdcRunner {
           spooled.filter(col("table").isin(drifting: _*)).select(concat(lit("{\""),
             element_at(typedLit(slot), col("table")), lit("\":"), col("praw"), lit("}"))).as[String]
         ).schema
+        // nested/array fields stage as raw-JSON STRING (§1.3)
         slot.map { case (table, s) => table -> schema.find(_.name == s).map(_.dataType).collect {
-          case st: StructType => st.fields.map(f => f.name -> payloadType(f.dataType)).toMap
+          case st: StructType => st.fields.map(f => f.name -> (f.dataType match {
+            case _: StructType | _: ArrayType | _: MapType => StringType
+            case t => t
+          })).toMap
         }.getOrElse(Map.empty) }
       }
-      val plans = keyed.map { case (_, table, acc0, newKeys) =>
+      val sysCols = Seq(col("op").as(Cdc.OpCol), col("ts_ms").as(Cdc.TsCol),
+        when(col("op") === "d", lit("true")).otherwise(lit("false")).as(Cdc.DeletedCol),
+        col("pos").as(Cdc.OrderCol))
+      tail(keyed.map { case (_, table, acc0, newKeys) =>
         val inf = inferred.getOrElse(table, Map.empty[String, DataType])
-        val acc = acc0 ++ newKeys.map(k => k -> inf.getOrElse(k, StringType))
-        val widened = acc.map { case (k, t) => k -> inf.get(k).fold(
-          audit(t, verdict.getOrElse((Cdc.safeTableId(table), k), 0)))(widenType(t, _)) }
-        (table, acc0.nonEmpty && widened != acc, widened)
-      }
-      // retype, then save, then append: a crash between any two replays this batch against
-      // a registry that is still old (the widening is found again and the idempotent retype
-      // re-runs) or already saved after its retype — saving first could strand staged
-      // history at the old type, and that parquet would never merge with the new chunks
-      for ((table, rewrite, widened) <- plans if rewrite)
-        StagingCatalog.retype(spark, stagingRoot, Cdc.safeTableId(table), widened.toMap)
-      registry.put(plans.map { case (table, _, widened) => table -> widened })
-      concurrently(plans) { case (table, _, widened) =>
-        val payloadCols = widened.map { case (k, t) => element_at(col("p"), k).cast(t).as(k) }
-        val sysCols = Seq(
-          col("op").as(Cdc.OpCol),
-          col("ts_ms").as(Cdc.TsCol),
-          when(col("op") === "d", lit("true")).otherwise(lit("false")).as(Cdc.DeletedCol),
-          col("pos").as(Cdc.OrderCol))
-        StagingCatalog.append(spooled.filter(col("table") === table)
-          .select(payloadCols ++ sysCols: _*), stagingRoot, Cdc.safeTableId(table))
-      }
+        // a registered column inference has no type for (absent, or all null) takes the
+        // audit's: verdict 0 keeps its type, 1 brings DOUBLE, 2 STRING
+        val cols = acc0.map { case (k, t) => k -> inf.getOrElse(k,
+          Seq(t, DoubleType, StringType)(verdict.getOrElse((Cdc.safeTableId(table), k), 0)))
+        } ++ newKeys.map(k => k -> inf.getOrElse(k, StringType))
+        TableInput(table, cols, spooled.filter(col("table") === table)
+          .select(cols.map { case (k, _) => element_at(col("p"), k).as(k) } ++ sysCols: _*))
+      })
     } finally cached.unpersist()
   }
 
-  /** Staging type of an inferred payload field: nested/array → raw-JSON STRING (§1.3). */
-  private def payloadType(t: DataType): DataType = t match {
-    case _: StructType | _: ArrayType | _: MapType => StringType
-    case other => other
+  /**
+   * Wire-format front-end: SMT-unwrapped flat Connect events. Table id comes from
+   * `schema.name` = `<topic>.<schema>.<table>.Value` with dots → underscores
+   * (`AppendDbConverter.java:27`); the payload is decoded at the types declared by the
+   * event's own `schema.fields` block (logical dates/timestamps included) — the sample is
+   * the highest-position event, whose schema is the widest (schemas grow additively, E1/E3).
+   */
+  private def wireInputs(batch: DataFrame, only: Option[Set[String]],
+      filters: ColumnFilters)(tail: Seq[TableInput] => Unit): Unit = {
+    import graft.operators.EnvelopeDecoder
+    val spooled0 = batch.select(col("pos"), col("value"),
+      regexp_replace(get_json_object(col("value"), "$.schema.name"), "\\.Value$", "").as("table"))
+    val spooled = only.fold(spooled0)(w => spooled0.filter(col("table").isin(w.toSeq: _*))).cache()
+    try {
+      // schema sample per table = the highest-position event's SCHEMA BLOCK. ONE
+      // aggregation action covers every table, and only the schema JSON crosses to the
+      // driver — get_json_object slices it out on the executors (VERDICT r3 #5)
+      val samples = spooled.groupBy(col("table"))
+        .agg(max_by(get_json_object(col("value"), "$.schema"), col("pos")).as("schema_json"))
+        .collect()
+        .collect { case r if r.getString(0) != null => r.getString(0) -> r.getString(1) }
+      tail(samples.toSeq.map { case (table, schemaBlock) =>
+        // P3/P4 at the connector level (ADVICE r2): filtered columns never reach the
+        // decode; system columns are never filterable
+        val elements = EnvelopeDecoder.parseSchemaElements(schemaBlock)
+          .filter(e => filters.admits(table, e.field))
+        val rows = EnvelopeDecoder.decodePayload(spooled.filter(col("table") === table),
+          "value", elements, passthrough = Seq("pos")).withColumnRenamed("pos", Cdc.OrderCol)
+        TableInput(table, rows.schema.fields.toSeq.filterNot(f => Cdc.SystemCols.contains(f.name))
+          .map(f => f.name -> f.dataType), rows)
+      })
+    } finally spooled.unpersist()
   }
 
-  private def isNumeric(t: DataType): Boolean = t match {
-    case LongType | IntegerType | DoubleType | FloatType | _: DecimalType => true
-    case _ => false
+  /** One table's input to [[stage]]: its incoming payload columns and types in first-seen
+    * order, and a frame holding those columns and its [[Cdc.SystemCols]]. */
+  private final case class TableInput(table: String, cols: Seq[(String, DataType)],
+      frame: DataFrame)
+
+  /** Staged files per table past which [[stage]] compacts it to one file: above the ~12 a
+    * fresh sync of a 10-file spool leaves, so chained runs of small micro-batches trip it. */
+  private val StagingCompactFiles = 32
+
+  /**
+   * The staging tail every input ends in (routed envelopes, wire events, JDBC snapshots).
+   * Types accumulate in the [[SchemaRegistry]] across batches AND runs (E4): each
+   * table's incoming columns merge into its registered schema in first-seen order, an
+   * existing column through [[widenType]]. A widening rewrites that table's staged history
+   * once ([[graft.operators.StagingCatalog.retype]]) so parquet chunks stay mergeable,
+   * the registry is saved once, and only then do the per-table appends run, concurrently.
+   * A table past [[StagingCompactFiles]] staged files is compacted after its append.
+   */
+  private def stage(spark: SparkSession, stagingRoot: String, registry: SchemaRegistry,
+      inputs: Seq[TableInput]): Unit = {
+    val plans = inputs.map { in =>
+      val acc0 = registry.get(in.table)
+      val acc = in.cols.foldLeft(acc0) { case (a, (k, t)) =>
+        val i = a.indexWhere(_._1 == k)
+        if (i < 0) a :+ (k -> t) else a.updated(i, k -> widenType(a(i)._2, t))
+      }
+      (in, acc.take(acc0.size) != acc0, acc)
+    }
+    // retype, then save, then append: a crash between any two replays this batch against
+    // a registry that is still old (the widening is found again and the idempotent retype
+    // re-runs) or already saved after its retype — saving first could strand staged
+    // history at the old type, and that parquet would never merge with the new chunks
+    for ((in, widened, acc) <- plans if widened)
+      StagingCatalog.retype(spark, stagingRoot, Cdc.safeTableId(in.table), acc.toMap)
+    registry.put(plans.map { case (in, _, acc) => in.table -> acc })
+    concurrently(plans) { case (in, _, acc) =>
+      val tid = Cdc.safeTableId(in.table)
+      val has = in.frame.columns.toSet
+      val payload = acc.map { case (k, t) =>
+        (if (has(k)) col("`" + k.replace("`", "``") + "`") else lit(null)).cast(t).as(k) }
+      StagingCatalog.append(in.frame.select(payload ++ Cdc.SystemCols.filter(has).map(col): _*),
+        stagingRoot, tid)
+      val dir = s"$stagingRoot/$tid"
+      if (BatchState.tripped(BatchState.fsOf(spark, dir), dir, StagingCompactFiles))
+        StagingCatalog.compact(spark, stagingRoot, tid): Unit
+    }
   }
 
-  /** Widen an EXISTING column's accumulated type given this batch's inferred type:
-    * numeric pairs meet at DOUBLE, anything else incompatible meets at STRING. A column
-    * inference has no type for (absent, or all null) is left to the audit. */
-  private def widenType(acc: DataType, inferred: DataType): DataType = inferred match {
-    case t if t == acc => acc
-    case t if (acc == LongType || acc == IntegerType) && isNumeric(t) => DoubleType
-    case t if (acc == DoubleType || acc == FloatType) && isNumeric(t) => acc
+  /** Widen an EXISTING column's accumulated type given its incoming type: INT and BIGINT
+    * meet at BIGINT, other numeric pairs at DOUBLE, anything else incompatible at STRING. */
+  private def widenType(acc: DataType, in: DataType): DataType = (acc, in) match {
+    case _ if acc == in => acc
+    case (IntegerType | LongType, IntegerType | LongType) => LongType
+    case (_: NumericType, _: NumericType) => DoubleType
     case _ => StringType
   }
-
-  /** A column's type after the try_cast audit verdict (0 fits, 1 DOUBLE-castable, 2 not). */
-  private def audit(t: DataType, verdict: Int): DataType =
-    if (verdict == 0) t else if (verdict == 1 && isNumeric(t)) DoubleType else StringType
 
   /**
    * E4: per-table accumulated payload schema (insertion-ordered), persisted across runs in
@@ -563,47 +603,6 @@ object CdcRunner {
         }.mkString("[", ", ", "]")
       }.mkString("{", ", ", "}"))
     }
-  }
-
-  /**
-   * Wire-format staging: SMT-unwrapped flat Connect events. Table id comes from
-   * `schema.name` = `<topic>.<schema>.<table>.Value` with dots → underscores
-   * (`AppendDbConverter.java:27`); the payload is decoded at the types declared by the
-   * event's own `schema.fields` block (logical dates/timestamps included) — the sample is
-   * the highest-position event, whose schema is the widest (schemas grow additively, E1/E3).
-   */
-  private def stageWireEvents(spark: SparkSession, batch: DataFrame, stagingRoot: String,
-      only: Option[Set[String]],
-      filters: ColumnFilters = ColumnFilters()): Unit = {
-    import spark.implicits._
-    import graft.operators.EnvelopeDecoder
-    val spooled0 = batch.select(col("pos"), col("value"),
-      regexp_replace(get_json_object(col("value"), "$.schema.name"), "\\.Value$", "").as("table"))
-    val spooled = only.fold(spooled0)(w => spooled0.filter(col("table").isin(w.toSeq: _*))).cache()
-    try {
-      // schema sample per table = the highest-position event's SCHEMA BLOCK (schemas grow
-      // additively, so the newest is the widest). ONE aggregation action covers every
-      // table, and only the schema JSON crosses to the driver — get_json_object slices it
-      // out on the executors, so a batch of megabyte rows ships kilobytes of column
-      // metadata (the old form pulled one FULL envelope per table, payload included, with
-      // a distinct + an agg action per table; VERDICT r3 "what's wrong" #5).
-      val samples = spooled.groupBy(col("table"))
-        .agg(max_by(get_json_object(col("value"), "$.schema"), col("pos")).as("schema_json"))
-        .collect()
-        .collect { case r if r.getString(0) != null => r.getString(0) -> r.getString(1) }
-      for ((table, schemaBlock) <- samples) {
-        val sub = spooled.filter(col("table") === table)
-        // P3/P4 apply at the connector level on this path too (ADVICE r2): filtered
-        // columns never reach the decode, the staged parquet, or the export. System
-        // `kbc__`/`__deleted` columns ride in the wire payload and are never filterable.
-        val tid = Cdc.safeTableId(table)
-        val elements = EnvelopeDecoder.parseSchemaElements(schemaBlock)
-          .filter(e => filters.admits(table, e.field))
-        val rows = EnvelopeDecoder.decodePayload(sub, "value", elements, passthrough = Seq("pos"))
-          .withColumnRenamed("pos", Cdc.OrderCol)
-        StagingCatalog.append(rows, stagingRoot, tid)
-      }
-    } finally spooled.unpersist()
   }
 
   /**

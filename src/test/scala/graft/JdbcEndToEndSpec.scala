@@ -301,4 +301,34 @@ class JdbcEndToEndSpec extends SparkSpec {
       .flatMap(f => Files.readAllLines(f.toPath).asScala).map(_.takeWhile(_ != ',')).sorted
     assert(ids.toSeq == Seq("1", "10", "11", "2"))
   }
+
+  test("a snapshot DOUBLE column widens a stream-registered BIGINT column instead of truncating") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import graft.streaming.CdcRunner
+    import graft.streaming.CdcRunner.{RunConfig, SnapshotSource}
+    conn.createStatement().execute("CREATE TABLE WIDEN(ID INT NOT NULL PRIMARY KEY, V DOUBLE)")
+    conn.createStatement().execute("INSERT INTO WIDEN VALUES (2, 1.5)")
+    val base = Files.createTempDirectory("graft-snapwiden").toString
+    val spool = s"$base/spool"
+    Files.createDirectories(Paths.get(spool))
+    Files.write(Paths.get(spool, "000.jsonl"), Seq(
+      """{"table":"app.widen","op":"c","after":{"id":1,"v":1},"before":null,"source":{"ts_ms":5000}}""").asJava)
+    val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+      primaryKeys = Map("app_widen" -> Seq("id")))
+    CdcRunner.run(spark, cfg)
+    val registry = Paths.get(s"$base/work/schemas.json")
+    assert(Files.readString(registry).contains(""""name": "v", "type": "BIGINT""""))
+    val res = CdcRunner.runWithSnapshot(spark, cfg, snapshotMode = "initial",
+      snapshots = Seq(SnapshotSource("app.widen",
+        SnapshotConfig(url, "APP.WIDEN", driver = Some(DerbyDriver)))),
+      isFirstRun = false, snapshotTsMs = 1000L)
+    assert(res.tables == Map("app_widen" -> 2L))
+    val csv = Option(new java.io.File(s"$base/out/tables/app_widen.csv").listFiles()).get
+      .filter(_.getName.endsWith(".csv"))
+      .flatMap(f => Files.readAllLines(f.toPath).asScala).sorted.toSeq
+    assert(csv.size == 2 && csv(0).startsWith("1,1.0,c,5000,false,") &&
+      csv(1) == "2,1.5,r,1000,false,-1", csv)
+    assert(Files.readString(registry).contains(""""name": "v", "type": "DOUBLE""""))
+  }
 }

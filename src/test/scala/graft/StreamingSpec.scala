@@ -335,6 +335,34 @@ class StreamingSpec extends SparkSpec {
     assert(StagingCatalog.table(spark, root, "c_t").count() == 6)
   }
 
+  test("chained runs at one event per micro-batch: staging compacts past its file trip") {
+    import graft.operators.StagingCatalog
+    val base = Files.createTempDirectory("graft-autocompact").toString
+    val spool = s"$base/spool"
+    // 40 equal-length events (20 inserts, then an update of each), so a byte budget of one
+    // line admits exactly one event per micro-batch: one staged file per batch
+    val lines = (0 until 40).map(i => env("k.t", if (i < 20) "c" else "u",
+      s"""{"id":${10 + i % 20},"v":${100 + i}}""", null, 1000L + i))
+    assert(lines.map(_.length).distinct.size == 1)
+    val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+      primaryKeys = Map("k_t" -> Seq("id")), maxBytesPerTrigger = Some(lines.head.length + 1L))
+    val root = s"$base/work/staging"
+    val fileCounts = lines.grouped(10).zipWithIndex.map { case (run, i) =>
+      writeSpool(spool, f"$i%03d.jsonl", run)
+      assert(CdcRunner.run(spark, cfg).stats.batches == 10L)
+      StagingCatalog.chunks(root, "k_t").size
+    }.toList
+    // 33 appends trip the compaction to one file; the last 7 append beside it
+    assert(fileCounts == List(10, 20, 30, 8), s"staged files after each run: $fileCounts")
+    assert(StagingCatalog.table(spark, root, "k_t").count() == 40)
+    // the uncompacted twin: the same spool staged in one micro-batch
+    val twin = RunConfig(spoolDir = spool, workDir = s"$base/twin", outDir = s"$base/twin-out",
+      primaryKeys = Map("k_t" -> Seq("id")))
+    assert(CdcRunner.run(spark, twin).tables == Map("k_t" -> 20L))
+    val csv = readCsvDir(s"$base/out/tables/k_t.csv").sorted
+    assert(csv.size == 20 && csv == readCsvDir(s"$base/twin-out/tables/k_t.csv").sorted)
+  }
+
   test("ingest-dedup stream: cross-batch digest index; resumed run admits only novel docs") {
     import graft.streaming.IngestDedup
     val base = Files.createTempDirectory("graft-ingest").toString
@@ -631,6 +659,43 @@ class StreamingSpec extends SparkSpec {
       .parquet(s"$base2/work/staging/topic_inv_items")
     assert(!staged2.columns.contains("name"))
     assert(staged2.columns.contains("kbc__operation")) // system column: filter ignored
+  }
+
+  test("wire type drift across runs: int32 -> int64 / double / string widens staged history") {
+    // run 1 stages `v` as int32; run 2's schema block declares another type. Staged parquet
+    // holding both types would fail every later read with CANNOT_MERGE_SCHEMAS
+    import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
+    def wire(vType: String, id: Int, v: String, ts: Long): String = {
+      val fields = s"""{"type":"int32","optional":false,"field":"id"},""" +
+        s"""{"type":"$vType","optional":true,"field":"v"},""" +
+        """{"type":"string","optional":true,"field":"kbc__operation"},""" +
+        """{"type":"int64","optional":true,"field":"kbc__event_timestamp","name":"io.debezium.time.Timestamp"},""" +
+        """{"type":"string","optional":true,"field":"__deleted"}"""
+      s"""{"schema":{"name":"topic.d.t.Value","fields":[$fields]},"payload":""" +
+        s"""{"id":$id,"v":$v,"kbc__operation":"c","kbc__event_timestamp":$ts,"__deleted":"false"}}"""
+    }
+    val cases = Seq[(String, String, String, String, DataType)](
+      ("int64", "5000000000", "7", "5000000000", LongType),
+      ("double", "2.5", "7.0", "2.5", DoubleType),
+      ("string", "\"x\"", "7", "x", StringType))
+    for ((vType, v, old, now, dt) <- cases) {
+      val base = Files.createTempDirectory("graft-wiredrift").toString
+      val spool = s"$base/spool"
+      val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+        primaryKeys = Map("topic_d_t" -> Seq("id")), wireFormat = true)
+      writeSpool(spool, "000.jsonl", Seq(wire("int32", 1, "7", 1000)))
+      CdcRunner.run(spark, cfg)
+      writeSpool(spool, "001.jsonl", Seq(wire(vType, 2, v, 2000)))
+      assert(CdcRunner.run(spark, cfg).tables == Map("topic_d_t" -> 2L), vType)
+      val csv = readCsvDir(s"$base/out/tables/topic_d_t.csv").sorted
+      assert(csv.size == 2 && csv(0).startsWith(s"1,$old,c,1000,false,") &&
+        csv(1).startsWith(s"2,$now,c,2000,false,"), s"$vType: $csv")
+      val staged = spark.read.option("mergeSchema", "true").parquet(s"$base/work/staging/topic_d_t")
+      assert(staged.schema("v").dataType == dt, vType)
+      val registry = Files.readString(Paths.get(s"$base/work/schemas.json"))
+      assert(registry.contains("\"topic_d_t\"") &&
+        registry.contains(s""""name": "v", "type": "${dt.sql}""""), registry)
+    }
   }
 
   test("watermarked tumbling-window aggregation over the cdc-spool stream") {
