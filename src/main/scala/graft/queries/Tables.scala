@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -7,6 +9,16 @@ import org.apache.spark.sql.types._
 /** Table reads and the decimal cast shared by every query family. */
 object Tables {
 
+  /**
+   * Reads `<dir>/<name>.parquet`. Its facts (inferred schema, byte size) are resolved once
+   * per session per table version: Spark's parquet schema inference launches a Spark job
+   * even for one file, so inferring on every reference would add a job to nearly every
+   * query. A later reference reads through `s.read.schema(facts.schema)` — a fresh relation per call, so
+   * self-joins keep distinct attribute ids — and launches no inference job. The facts are
+   * invalidated by any change to the table's qualified path, modification time or length
+   * and, for a directory table, its content summary (bytes, file and directory counts).
+   * A table that cannot be stat'ed or read fails the query.
+   */
   private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     // The sf testdata has shipped `ts` as parquet TIMESTAMP(NANOS) (which vanilla Spark 4
     // refuses — PARQUET_TYPE_ILLEGAL — so it reads as a nanos long under the legacy conf)
@@ -15,13 +27,43 @@ object Tables {
     // session timezone is UTC everywhere (Verify/SparkSpec), so the NTZ cast is the
     // identity on the epoch value — and every query downstream sees one timestamp type.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df0 = s.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val facts = factsOf(s, path)
+    val df0 = s.read.schema(facts.schema).parquet(path)
     val df1 = df0.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) => df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case Some(TimestampNTZType) => df0.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df0
     }
-    scanFloor(s, df1, s"$dir/$name.parquet")
+    scanFloor(s, df1, facts.bytes)
+  }
+
+  /** What [[t]] learns about one table version: `stamp` identifies the version. */
+  private final case class Facts(stamp: String, schema: StructType, bytes: Long)
+
+  /** Facts per session (inference reads session conf), then per qualified table path. Weak
+    * keys: a stopped session's facts go with it. */
+  private val sessionFacts =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Facts]]()
+
+  private def factsOf(s: SparkSession, path: String): Facts = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val summary = if (st.isDirectory) Some(fs.getContentSummary(p)) else None
+    val stamp = s"${st.getModificationTime}|${st.getLen}" + summary.fold("")(c =>
+      s"|${c.getLength}|${c.getFileCount}|${c.getDirectoryCount}")
+    val tables = sessionFacts.synchronized {
+      sessionFacts.computeIfAbsent(s, _ => new ConcurrentHashMap[String, Facts]())
+    }
+    val key = st.getPath.toString
+    val known = tables.get(key)
+    if (known != null && known.stamp == stamp) known
+    else {
+      val fresh = Facts(stamp, s.read.parquet(path).schema, summary.fold(st.getLen)(_.getLength))
+      tables.put(key, fresh)
+      fresh
+    }
   }
 
   /** Compressed parquet bytes per scan-floor partition: ms-scale scan work (snappy +
@@ -57,12 +99,11 @@ object Tables {
    * fact the floor needs: whether the planned scan already splits at least `want`
    * ways (single-file local inputs plan ≤ a handful of splits; a 100 TB input plans
    * orders of magnitude more than the core count, so the floor stays the identity).
-   * A path whose size cannot be read fails the query rather than skipping the floor.
+   * `bytes` is the table's size from the facts [[t]] resolves once per table version (the
+   * file length, or a directory's content-summary length), so a reference costs no
+   * filesystem size query; a path whose size cannot be read fails the query in [[t]].
    */
-  private def scanFloor(s: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val bytes =
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+  private def scanFloor(s: SparkSession, df: DataFrame, bytes: Long): DataFrame = {
     val cores = s.sparkContext.defaultParallelism.toLong
     val want = math.min(cores, math.max(1L, bytes / ScanFloorTargetBytes)).toInt
     if (want <= 1) return df

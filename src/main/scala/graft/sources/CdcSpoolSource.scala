@@ -144,45 +144,79 @@ object CdcSpoolSource {
  * range boundary that coincides with a line start still assigns the line to the range that
  * contains it (exact tiling across arbitrary cut points — the Hadoop LineRecordReader
  * protocol). Reads at most one line past endByte.
+ *
+ * Lines are found by scanning a refilled byte buffer for `\n` (it doubles for a line longer
+ * than itself) and emitted as UTF-8 bytes; a line that is not valid UTF-8 is decoded through
+ * `String`, which replaces each bad sequence with U+FFFD. `bufferSize` is the initial size.
  */
-private[sources] final class SpoolLineReader(file: String, startByte: Long, endByte: Long) {
+private[sources] final class SpoolLineReader(file: String, startByte: Long, endByte: Long,
+    bufferSize: Int = 1 << 16) {
   // Hadoop FS open + seek: byte-range reads work against any executor-reachable store
   // (HDFS/S3/local), and seeking beats skipping for large start offsets
-  private val fsIn = {
+  private val in = {
     val p = new org.apache.hadoop.fs.Path(file)
     val stream = p.getFileSystem(CdcSpoolSource.hadoopConf()).open(p)
     if (startByte > 0) stream.seek(startByte - 1)
     stream
   }
-  private val in = new java.io.BufferedInputStream(fsIn, 1 << 16)
-  private var pos = 0L              // absolute position of the next unread byte
+  private var buf = new Array[Byte](bufferSize)
+  private var head = 0              // next unread byte in buf
+  private var tail = 0              // end of the bytes read into buf
+  private var pos = 0L              // absolute position of buf(head)
   private var lineStart = 0L
-  private var line: String = _
-  private val buf = new java.io.ByteArrayOutputStream(256)
+  private var line: UTF8String = _
 
   // position the stream: from startByte-1, discard through the first newline
   if (startByte > 0) {
     pos = startByte - 1
-    var b = in.read()
-    while (b != -1 && b != '\n') { pos += 1; b = in.read() }
-    if (b == '\n') pos += 1
+    val nl = newline(keep = false)
+    if (nl >= 0) { pos += nl + 1 - head; head = nl + 1 }
   }
 
-  def currentLine: String = line
+  /** Index in buf of the next `\n` at or after head, reading more as needed; -1 at end of
+    * file. With `keep` the bytes from head stay in buf (shifted to 0, buf grown when full);
+    * without, scanned bytes are dropped and counted into pos. */
+  private def newline(keep: Boolean): Int = {
+    var i = head
+    while (true) {
+      while (i < tail) {
+        if (buf(i) == '\n') return i
+        i += 1
+      }
+      if (!keep) { pos += tail - head; head = 0; tail = 0; i = 0 }
+      else {
+        if (head > 0) {
+          System.arraycopy(buf, head, buf, 0, tail - head)
+          tail -= head; i -= head; head = 0
+        }
+        if (tail == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      }
+      val n = in.read(buf, tail, buf.length - tail)
+      if (n < 0) return -1
+      tail += n
+    }
+    -1
+  }
+
+  def currentLine: String = line.toString
+  def currentUtf8: UTF8String = line
   def currentStart: Long = lineStart
 
   /** Advance to the next in-range line; false at end of range or file. */
   def next(): Boolean = {
     if (pos >= endByte) return false
+    val nl = newline(keep = true)
+    if (nl < 0 && head == tail) return false
+    val end = if (nl >= 0) nl else tail
+    val n = if (end > head && buf(end - 1) == '\r') end - 1 - head else end - head
+    val bytes = java.util.Arrays.copyOfRange(buf, head, head + n)
+    val utf8 = UTF8String.fromBytes(bytes)
+    line = if (utf8.isValid) utf8
+      else UTF8String.fromString(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
     lineStart = pos
-    buf.reset()
-    var b = in.read()
-    if (b == -1) return false
-    while (b != -1 && b != '\n') { buf.write(b); pos += 1; b = in.read() }
-    if (b == '\n') pos += 1
-    val bytes = buf.toByteArray
-    val n = if (bytes.nonEmpty && bytes(bytes.length - 1) == '\r') bytes.length - 1 else bytes.length
-    line = new String(bytes, 0, n, java.nio.charset.StandardCharsets.UTF_8)
+    val consumed = (if (nl >= 0) nl + 1 else tail) - head
+    pos += consumed
+    head += consumed
     true
   }
 
@@ -343,7 +377,7 @@ class CdcSpoolReaderFactory extends PartitionReaderFactory {
       private val reader = new SpoolLineReader(p.file, p.startByte, p.endByte)
       override def next(): Boolean = reader.next()
       override def get(): InternalRow =
-        InternalRow(UTF8String.fromString(reader.currentLine), p.base + reader.currentStart)
+        InternalRow(reader.currentUtf8, p.base + reader.currentStart)
       override def close(): Unit = reader.close()
     }
   }
