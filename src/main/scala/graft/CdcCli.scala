@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.streaming.CdcRunner
-import graft.streaming.CdcRunner.RunConfig
+import graft.streaming.CdcRunner.{ColumnFilters, RunConfig}
 
 /**
  * §3.2: standalone CLI engine — the Spark form of
@@ -12,102 +12,76 @@ import graft.streaming.CdcRunner.RunConfig
  * Usage:
  *   spark-submit --class graft.CdcCli <jar> \
  *     --spool <dir> --work <dir> --out <dir> \
- *     [--mode APPEND|DEDUPE] [--load-type full_load|incremental_load|append_incremental|append_full] \
+ *     [--mode|--load-type full_load|incremental_load|append_incremental|append_full|dedupe|append] \
  *     [--pk table=col1,col2]... [--max-batch-bytes n] \
  *     [--stop-at-pos n] [--stop-at-file f] [--max-wait-ms n] [--max-duration-ms n] \
  *     [--signal-file path] [--signal-table t] [--read-only] \
  *     [--include-cols t=c1,c2] [--exclude-cols t=c3] \
  *     [--include-cols-regex re]... [--exclude-cols-regex re]... \
- *     [--include t1,t2] [--snapshot-tables t1,t2] [--cpus n]
+ *     [--include t1,t2] [--snapshot-tables t1,t2] [--wire-format] [--cpus n]
+ *
+ * `--mode` and `--load-type` are one option: the reference's `load_type`, with `dedupe`
+ * (incremental_load, the default) and `append` (append_full) as aliases.
  */
 object CdcCli {
 
-  final case class Args(
-      spool: String = null, work: String = null, out: String = null,
-      mode: String = "dedupe", loadType: Option[String] = None,
-      pks: Map[String, Seq[String]] = Map.empty,
-      maxBatchBytes: Option[Long] = None, stopAtPos: Option[Long] = None,
-      stopAtFile: Option[String] = None,
-      include: Option[Set[String]] = None, snapshotTables: Seq[String] = Nil,
-      maxWaitMs: Option[Long] = None, maxDurationMs: Option[Long] = None,
-      signalFile: Option[String] = None, signalTable: Option[String] = None,
-      readOnly: Boolean = false,
-      includeCols: Map[String, Seq[String]] = Map.empty,
-      excludeCols: Map[String, Seq[String]] = Map.empty,
-      includeColsRegex: Seq[String] = Nil,
-      excludeColsRegex: Seq[String] = Nil,
-      wireFormat: Boolean = false,
-      cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-
-  def parseArgs(argv: Seq[String]): Args = {
-    def loop(rest: List[String], acc: Args): Args = rest match {
-      case Nil => acc
-      case "--spool" :: v :: t => loop(t, acc.copy(spool = v))
-      case "--work" :: v :: t => loop(t, acc.copy(work = v))
-      case "--out" :: v :: t => loop(t, acc.copy(out = v))
-      case "--mode" :: v :: t => loop(t, acc.copy(mode = v.toLowerCase))
-      // the reference's destination.load_type; implies the dedupe/append branch AND the
-      // manifest incremental flag (two independent axes --mode alone conflates)
-      case "--load-type" :: v :: t =>
-        val lt = v.toLowerCase
-        loop(t, acc.copy(loadType = Some(lt),
-          mode = if (lt == "full_load" || lt == "incremental_load") "dedupe" else "append"))
-      case "--pk" :: v :: t =>
-        val Array(table, cols) = v.split("=", 2)
-        loop(t, acc.copy(pks = acc.pks + (table -> cols.split(",").toSeq)))
-      case "--max-batch-bytes" :: v :: t => loop(t, acc.copy(maxBatchBytes = Some(v.toLong)))
-      case "--stop-at-pos" :: v :: t => loop(t, acc.copy(stopAtPos = Some(v.toLong)))
-      case "--stop-at-file" :: v :: t => loop(t, acc.copy(stopAtFile = Some(v)))
-      case "--max-wait-ms" :: v :: t => loop(t, acc.copy(maxWaitMs = Some(v.toLong)))
-      case "--max-duration-ms" :: v :: t => loop(t, acc.copy(maxDurationMs = Some(v.toLong)))
-      case "--signal-file" :: v :: t => loop(t, acc.copy(signalFile = Some(v)))
-      case "--signal-table" :: v :: t => loop(t, acc.copy(signalTable = Some(v)))
-      case "--read-only" :: t => loop(t, acc.copy(readOnly = true))
+  /** The run's [[RunConfig]] and the local core count (`--cpus`). An unknown argument or
+    * mode throws `IllegalArgumentException`. */
+  def parseArgs(argv: Seq[String]): (RunConfig, String) = {
+    var cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    def table(v: String): (String, Seq[String]) = {
+      val Array(t, cols) = v.split("=", 2)
+      t -> cols.split(",").toSeq
+    }
+    def columns(c: RunConfig)(f: ColumnFilters => ColumnFilters) = c.copy(columns = f(c.columns))
+    def loop(rest: List[String], c: RunConfig): RunConfig = rest match {
+      case Nil => c
+      case "--spool" :: v :: t => loop(t, c.copy(spoolDir = v))
+      case "--work" :: v :: t => loop(t, c.copy(workDir = v))
+      case "--out" :: v :: t => loop(t, c.copy(outDir = v))
+      case ("--mode" | "--load-type") :: v :: t => loop(t, c.copy(mode = v.toLowerCase))
+      case "--pk" :: v :: t => loop(t, c.copy(primaryKeys = c.primaryKeys + table(v)))
+      case "--max-batch-bytes" :: v :: t => loop(t, c.copy(maxBytesPerTrigger = Some(v.toLong)))
+      case "--stop-at-pos" :: v :: t => loop(t, c.copy(stopAtPos = Some(v.toLong)))
+      case "--stop-at-file" :: v :: t => loop(t, c.copy(stopAtFile = Some(v)))
+      case "--max-wait-ms" :: v :: t => loop(t, c.copy(maxWaitMs = Some(v.toLong)))
+      case "--max-duration-ms" :: v :: t => loop(t, c.copy(maxDurationMs = Some(v.toLong)))
+      case "--signal-file" :: v :: t => loop(t, c.copy(signalFile = Some(v)))
+      case "--signal-table" :: v :: t => loop(t, c.copy(signalTable = Some(v)))
+      case "--read-only" :: t => loop(t, c.copy(readOnly = true))
       case "--include-cols" :: v :: t =>
-        val Array(table, cols) = v.split("=", 2)
-        loop(t, acc.copy(includeCols = acc.includeCols + (table -> cols.split(",").toSeq)))
+        loop(t, columns(c)(f => f.copy(include = f.include + table(v))))
       case "--exclude-cols" :: v :: t =>
-        val Array(table, cols) = v.split("=", 2)
-        loop(t, acc.copy(excludeCols = acc.excludeCols + (table -> cols.split(",").toSeq)))
+        loop(t, columns(c)(f => f.copy(exclude = f.exclude + table(v))))
       // the reference's column_filter config: regexes over fully-qualified <table>.<column>
       case "--include-cols-regex" :: v :: t =>
-        loop(t, acc.copy(includeColsRegex = acc.includeColsRegex :+ v))
+        loop(t, columns(c)(f => f.copy(includeRegex = f.includeRegex :+ v)))
       case "--exclude-cols-regex" :: v :: t =>
-        loop(t, acc.copy(excludeColsRegex = acc.excludeColsRegex :+ v))
-      case "--include" :: v :: t => loop(t, acc.copy(include = Some(v.split(",").toSet)))
-      case "--snapshot-tables" :: v :: t => loop(t, acc.copy(snapshotTables = v.split(",").toSeq))
-      case "--wire-format" :: t => loop(t, acc.copy(wireFormat = true))
-      case "--cpus" :: v :: t => loop(t, acc.copy(cpus = v))
+        loop(t, columns(c)(f => f.copy(excludeRegex = f.excludeRegex :+ v)))
+      case "--include" :: v :: t => loop(t, c.copy(includeTables = Some(v.split(",").toSet)))
+      case "--snapshot-tables" :: v :: t => loop(t, c.copy(snapshotTables = v.split(",").toSeq))
+      case "--wire-format" :: t => loop(t, c.copy(wireFormat = true))
+      case "--cpus" :: v :: t => cpus = v; loop(t, c)
       case other :: _ => throw new IllegalArgumentException(s"unknown argument: $other")
     }
-    val a = loop(argv.toList, Args())
-    require(a.spool != null && a.work != null && a.out != null,
+    val cfg = loop(argv.toList, RunConfig(null, null, null))
+    require(cfg.spoolDir != null && cfg.workDir != null && cfg.outDir != null,
       "--spool, --work and --out are required")
-    require(a.mode == "append" || a.mode == "dedupe", s"unknown mode: ${a.mode}")
-    a
+    CdcRunner.loadPolicy(cfg) // an unknown mode fails before a session starts
+    (cfg, cpus)
   }
 
   def main(argv: Array[String]): Unit = {
-    val a = parseArgs(argv.toSeq)
+    val (cfg, cpus) = parseArgs(argv.toSeq)
     val spark = GraftConf.tune(SparkSession.builder()
-      .master(s"local[${a.cpus}]")
+      .master(s"local[$cpus]")
       .appName("graft-cdc")
-      .config("spark.sql.shuffle.partitions", a.cpus)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val res = CdcRunner.run(spark, RunConfig(
-        spoolDir = a.spool, workDir = a.work, outDir = a.out, mode = a.mode,
-        loadType = a.loadType,
-        primaryKeys = a.pks, maxBytesPerTrigger = a.maxBatchBytes, stopAtPos = a.stopAtPos,
-        stopAtFile = a.stopAtFile,
-        includeTables = a.include, snapshotTables = a.snapshotTables,
-        maxWaitMs = a.maxWaitMs, maxDurationMs = a.maxDurationMs,
-        signalFile = a.signalFile, signalTable = a.signalTable, readOnly = a.readOnly,
-        includeColumns = a.includeCols, excludeColumns = a.excludeCols,
-        includeColumnsRegex = a.includeColsRegex, excludeColumnsRegex = a.excludeColsRegex,
-        wireFormat = a.wireFormat))
+      val res = CdcRunner.run(spark, cfg)
       val tables = res.tables.toSeq.sortBy(_._1)
         .map { case (t, n) => s""""$t": $n""" }.mkString("{", ", ", "}")
       println(s"""{"tables": $tables, "last_offset": ${res.lastPos}, "records": ${res.stats.records}}""")

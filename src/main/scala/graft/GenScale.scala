@@ -37,18 +37,8 @@ object GenScale {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def read(name: String): DataFrame = {
-      val df0 = spark.read.parquet(s"$src/$name.parquet")
-      df0.schema.fields.find(_.name == "ts").map(_.dataType) match {
-        case Some(org.apache.spark.sql.types.LongType) =>
-          df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case Some(org.apache.spark.sql.types.TimestampNTZType) =>
-          df0.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => df0
-      }
-    }
+    def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).first().getLong(0) + 1L
 

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import graft.sinks.CsvManifestSink.jsonString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -45,19 +46,6 @@ object Verify {
     }
   }
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -78,11 +66,11 @@ object Verify {
       }
     val statuses = SparkEntry.queries.keys
       .filter(n => only.forall(_.contains(n))).toSeq.sorted
-      .map(n => s"${jq(n)}: ${jq(failures.get(n).fold("ok")(m => s"ERROR: $m"))}")
+      .map(n => s"${jsonString(n)}: ${jsonString(failures.get(n).fold("ok")(m => s"ERROR: $m"))}")
     Files.writeString(Paths.get(s"$outDir/verify_status.json"),
       statuses.mkString("{", ",", "}"))
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} queries failed: ${failures.keys.toSeq.sorted.mkString(", ")}")

@@ -20,18 +20,14 @@ object Tables {
    * A table that cannot be stat'ed or read fails the query.
    */
   private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // The sf testdata has shipped `ts` as parquet TIMESTAMP(NANOS) (which vanilla Spark 4
-    // refuses — PARQUET_TYPE_ILLEGAL — so it reads as a nanos long under the legacy conf)
-    // and, since the 2026-08-13 regeneration, as TIMESTAMP(MICROS, isAdjustedToUTC=false)
-    // (which Spark infers as TIMESTAMP_NTZ). Normalize BOTH to plain TimestampType here —
-    // session timezone is UTC everywhere (Verify/SparkSpec), so the NTZ cast is the
-    // identity on the epoch value — and every query downstream sees one timestamp type.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // The sf testdata ships `ts` as TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark
+    // infers as TIMESTAMP_NTZ. Normalize it to plain TimestampType here — session timezone
+    // is UTC everywhere (Verify/SparkSpec), so the cast is the identity on the epoch value —
+    // and every query downstream sees one timestamp type.
     val path = s"$dir/$name.parquet"
     val facts = factsOf(s, path)
     val df0 = s.read.schema(facts.schema).parquet(path)
     val df1 = df0.schema.fields.find(_.name == "ts").map(_.dataType) match {
-      case Some(LongType) => df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case Some(TimestampNTZType) => df0.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df0
     }

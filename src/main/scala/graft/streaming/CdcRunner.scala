@@ -34,13 +34,10 @@ object CdcRunner {
       spoolDir: String,
       workDir: String,                       // staging parquet + checkpoint live here across runs
       outDir: String,                        // out/tables/*.csv[, .manifest], state.json
-      mode: String = "dedupe",               // "dedupe" | "append" (D4 policy)
-      /** The reference's four `destination.load_type`s (`configuration.py:169-184`) map
-        * onto two independent axes — dedupe (full_load/incremental_load) and the
-        * manifest's incremental flag (incremental_load/append_incremental) — which
-        * `mode` alone conflates: plain "dedupe" = incremental_load, plain "append" =
-        * append_full. Set this to pick the other two combinations. */
-      loadType: Option[String] = None,
+      /** The reference's `destination.load_type` (`configuration.py:169-184`): one of
+        * full_load, incremental_load, append_incremental, append_full; "dedupe" and
+        * "append" are aliases of incremental_load and append_full (D4 policy). */
+      mode: String = "dedupe",
       primaryKeys: Map[String, Seq[String]] = Map.empty, // per-table; empty -> D9 fallback
       /** Admission control, in offset units = spool bytes (`max.batch.size` analog). */
       maxBytesPerTrigger: Option[Long] = None,
@@ -56,17 +53,10 @@ object CdcRunner {
       snapshotTables: Seq[String] = Nil,
       /** P5: `table.include.list` — None = all tables discovered in the stream. */
       includeTables: Option[Set[String]] = None,
-      /** P3/P4: `column.include.list` / `column.exclude.list` per table (safe id) —
-        * applied at STAGING like the reference applies them at the connector: filtered
-        * columns never enter the accumulated schema or the staged parquet. */
-      includeColumns: Map[String, Seq[String]] = Map.empty,
-      excludeColumns: Map[String, Seq[String]] = Map.empty,
-      /** P3/P4 regex form — the connector's actual contract: whole-string regexes over the
-        * fully-qualified `<table>.<column>` name (the reference passes its `column_filter`
-        * config straight into Debezium's `column.(include|exclude).list`, e.g.
-        * `^inventory\.sales\.user.*` in the `incremental-column-filter-chained` golden). */
-      includeColumnsRegex: Seq[String] = Nil,
-      excludeColumnsRegex: Seq[String] = Nil,
+      /** P3/P4: `column.include.list` / `column.exclude.list` — applied at STAGING like
+        * the reference applies them at the connector: filtered columns never enter the
+        * accumulated schema or the staged parquet. */
+      columns: ColumnFilters = ColumnFilters(),
       /** S5 file signal channel (`signal.file`): an execute-snapshot signal JSON written
         * beside the run; its data-collections are backfilled like [[snapshotTables]]. The
         * ONLY channel allowed in read-only mode (`mysql_extractor.py:187-193`). */
@@ -83,11 +73,9 @@ object CdcRunner {
         * boundary and the checkpoint resumes next invocation. */
       maxDurationMs: Option[Long] = None,
       /** §2.7 idle stop — the reference's `max_wait_s`/`-mw` (`AbstractDebeziumTask.java:
-        * 166-189`): stop after this long with NO new records, gated on the snapshot-in-
-        * progress flag (`KeboolaNotification.java:24-34`). When set, the run uses a
+        * 166-189`): stop after this long with NO new records. When set, the run uses a
         * continuous micro-batch trigger (so a spool being written CONCURRENTLY keeps being
-        * consumed — `Trigger.AvailableNow` would freeze the target at start) and a driver
-        * control loop polls every 500 ms like the reference's `Await`. */
+        * consumed — `Trigger.AvailableNow` would freeze the target at start). */
       maxWaitMs: Option[Long] = None,
       /** Input format. `false` (default): routed envelopes `{"table":…,"op":…,"after":…}`
         * typed by the accumulated schema. `true`: the reference engine's actual wire
@@ -113,31 +101,27 @@ object CdcRunner {
    * the reference's whole `component.py:80-152` lifecycle. The snapshot stages each table's
    * bulk read as `r` rows at order −1 (before every stream position), so the LWW dedupe
    * absorbs snapshot/stream overlap exactly like replays: a streamed update to a
-   * snapshotted key wins, a never-streamed key keeps its snapshot row. The
-   * snapshot-in-progress flag is held while snapshots run (gating idle stops, §2.7),
-   * and `effectiveMode` applies the D4 first-run policy (first dedupe run ⇒ snapshot only).
+   * snapshotted key wins, a never-streamed key keeps its snapshot row. Snapshots are
+   * staged before the stream starts, so they never overlap the idle clock (§2.7), and
+   * `effectiveMode` applies the D4 first-run policy (first dedupe run ⇒ snapshot only).
    */
   def runWithSnapshot(spark: SparkSession, cfg: RunConfig, snapshotMode: String,
       snapshots: Seq[SnapshotSource], isFirstRun: Boolean = true,
-      snapshotTsMs: Long = System.currentTimeMillis(),
-      stats: SyncStats = new SyncStats): RunResult = {
+      snapshotTsMs: Long = System.currentTimeMillis()): RunResult = {
     import graft.sources.JdbcSnapshot
     val (dedupe, _) = loadPolicy(cfg)
     val mode = JdbcSnapshot.effectiveMode(
       JdbcSnapshot.parseMode(snapshotMode), isFirstRun, dedupe = dedupe)
     val stagingRoot = s"${cfg.workDir}/staging"
     val registry = new SchemaRegistry(s"${cfg.workDir}/schemas.json")
-    if (mode.doSnapshot && snapshots.nonEmpty) {
-      stats.setSnapshotInProgress(true)
-      try stage(spark, stagingRoot, registry,
-        snapshots.map(snapshotInput(spark, _, snapshotTsMs, filtersOf(cfg))))
-      finally stats.setSnapshotInProgress(false)
-    }
+    if (mode.doSnapshot && snapshots.nonEmpty)
+      stage(spark, stagingRoot, registry,
+        snapshots.map(snapshotInput(spark, _, snapshotTsMs, cfg.columns)))
     // a no-stream mode still runs the full post-processing/export: a zero-byte position
     // target makes the stream a no-op
     val streamCfg = if (mode.doStream) cfg
       else cfg.copy(stopAtPos = Some(0L), stopAtFile = None, maxWaitMs = None)
-    run(spark, streamCfg, stats)
+    run(spark, streamCfg)
   }
 
   /** One snapshot read as staging input: column names lowercased to the envelope
@@ -164,21 +148,20 @@ object CdcRunner {
     case _ => StringType // decimals (exact rendering), dates, timestamps, nested
   }
 
-  /** `stats` is injectable so composed runs (snapshot→stream) and tests can flip the
-    * snapshot-in-progress gate while the stream runs. */
-  def run(spark: SparkSession, cfg: RunConfig,
-      stats: SyncStats = new SyncStats): RunResult = {
+  def run(spark: SparkSession, cfg: RunConfig): RunResult = {
     require(!(cfg.readOnly && cfg.signalTable.nonEmpty),
       "read-only mode: source-table signal channel is not available, use the file channel")
-    loadPolicy(cfg) // an unknown mode or load type fails here, before any write
+    loadPolicy(cfg) // an unknown mode fails here, before any write
     val stagingRoot = s"${cfg.workDir}/staging"
     val registry = new SchemaRegistry(s"${cfg.workDir}/schemas.json") // E4 carryover
     val signalTableId = cfg.signalTable.map(Cdc.safeTableId)
     // the signal table must flow through the stream even under an include filter
     val includeWithSignals = cfg.includeTables.map(ts => ts ++ cfg.signalTable)
-    spark.streams.addListener(stats) // D8: progress/record bookkeeping via listener
-    // removed on every exit: a foreachBatch failure rethrown by awaitTermination must
-    // not leave the listener registered on the session
+    // D8: progress/record bookkeeping of THIS run's query, by its unique name. Removed
+    // on every exit: a foreachBatch failure rethrown by awaitTermination must not leave
+    // the listener registered on the session
+    val stats = new SyncStats(s"graft-cdc-${java.util.UUID.randomUUID()}")
+    spark.streams.addListener(stats)
     try {
       val reader = spark.readStream.format("graft.sources.CdcSpoolSource")
         .option("path", cfg.spoolDir)
@@ -190,41 +173,27 @@ object CdcRunner {
       val trigger =
         if (cfg.maxWaitMs.isDefined) Trigger.ProcessingTime(100) else Trigger.AvailableNow()
       val query = stream.writeStream
+        .queryName(stats.queryName)
         .trigger(trigger)
         .option("checkpointLocation", s"${cfg.workDir}/checkpoint")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           stageEvents(spark, batch, stagingRoot, registry, cfg.wireFormat,
-            includeWithSignals, filtersOf(cfg))
+            includeWithSignals, cfg.columns)
         }
         .start()
-      cfg.maxWaitMs match {
-        case Some(wait) =>
-          // reference control loop (`AbstractDebeziumTask.java:166-189`): poll every 500 ms;
-          // stop when idle > maxWait AND no snapshot is in progress; max duration still caps
-          // the whole run. Stops are taken at trigger boundaries, not mid-batch.
-          val deadline = cfg.maxDurationMs.map(System.currentTimeMillis() + _)
-          var running = query.isActive
-          while (running) {
-            query.awaitTermination(500)
-            running = query.isActive
-            if (running) {
-              val idleMs = System.currentTimeMillis() - stats.snapshot.lastEventMs
-              val timedOut = deadline.exists(System.currentTimeMillis() >= _)
-              val idleStop = idleMs > wait && !stats.snapshotInProgress &&
-                !query.status.isTriggerActive
-              if (timedOut || idleStop) { query.stop(); running = false }
-            }
-          }
-        case None =>
-          cfg.maxDurationMs match {
-            case Some(ms) => if (!query.awaitTermination(ms)) query.stop()
-            case None     => query.awaitTermination()
-          }
+      // reference control loop (`AbstractDebeziumTask.java:166-189`), checked every 500 ms
+      // until the query ends on its own (an AvailableNow drain returns at once): stop at
+      // the max-duration deadline, or once idle past maxWait between triggers
+      val deadline = cfg.maxDurationMs.map(System.currentTimeMillis() + _)
+      while (!query.awaitTermination(500)) {
+        val now = System.currentTimeMillis()
+        val idle = cfg.maxWaitMs.exists(now - stats.snapshot.lastEventMs > _) &&
+          !query.status.isTriggerActive
+        if (deadline.exists(now >= _) || idle) query.stop()
       }
-      // progress events arrive on an async listener bus; give the final batch's event a moment
-      val deadline = System.currentTimeMillis() + 2000
-      while (stats.snapshot.processing && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
+      // progress events arrive on an async listener bus, in order: the termination event
+      // follows the final batch's progress
+      stats.awaitTerminated(2000)
     } finally spark.streams.removeListener(stats)
 
     // S5: blocking-snapshot signals from every channel — config-driven table additions,
@@ -246,7 +215,7 @@ object CdcRunner {
       val batchDf = spark.read.format("graft.sources.CdcSpoolSource")
         .option("path", cfg.spoolDir).load()
       stageEvents(spark, batchDf, stagingRoot, registry, cfg.wireFormat,
-        Some(backfill.toSet), filtersOf(cfg))
+        Some(backfill.toSet), cfg.columns)
     }
     if (signals.nonEmpty) { // backfill staged successfully: retire the signals
       // The processed-ids record lands only AFTER the backfill's staging append succeeded,
@@ -276,18 +245,14 @@ object CdcRunner {
     RunResult(counts, lastPos, cfg.outDir, stats.snapshot)
   }
 
-  /** The (dedupe, incremental) axes of the reference's four `load_type`s: `loadType`
-    * when set, else `mode` ("dedupe" = incremental_load, "append" = append_full).
-    * Throws `IllegalArgumentException` on an unknown `mode` or `loadType`. */
-  private def loadPolicy(cfg: RunConfig): (Boolean, Boolean) = {
-    require(cfg.mode == "dedupe" || cfg.mode == "append", s"unknown mode '${cfg.mode}'")
-    cfg.loadType.getOrElse(if (cfg.mode == "dedupe") "incremental_load" else "append_full") match {
-      case "full_load"          => (true, false)
-      case "incremental_load"   => (true, true)
-      case "append_incremental" => (false, true)
-      case "append_full"        => (false, false)
-      case other => throw new IllegalArgumentException(s"unknown load_type '$other'")
-    }
+  /** The (dedupe, incremental) axes of `mode`, one of the reference's four `load_type`s
+    * or an alias. Throws `IllegalArgumentException` on an unknown `mode`. */
+  private[graft] def loadPolicy(cfg: RunConfig): (Boolean, Boolean) = cfg.mode match {
+    case "full_load"                   => (true, false)
+    case "incremental_load" | "dedupe" => (true, true)
+    case "append_incremental"          => (false, true)
+    case "append_full" | "append"      => (false, false)
+    case other => throw new IllegalArgumentException(s"unknown mode '$other'")
   }
 
   private[graft] final case class TableExport(table: String, rows: Long, maxPos: Long,
@@ -618,8 +583,6 @@ object CdcRunner {
       excludeRegex: Seq[String] = Nil) {
     private val incP = includeRegex.map(_.r.pattern)
     private val excP = excludeRegex.map(_.r.pattern)
-    val isEmpty: Boolean =
-      include.isEmpty && exclude.isEmpty && includeRegex.isEmpty && excludeRegex.isEmpty
     def admits(table: String, name: String): Boolean = {
       if (name.startsWith("kbc__") || name == "__deleted") return true
       val tid = Cdc.safeTableId(table)
@@ -631,9 +594,5 @@ object CdcRunner {
         !excP.exists(_.matcher(fq).matches())
     }
   }
-
-  private def filtersOf(cfg: RunConfig): ColumnFilters =
-    ColumnFilters(cfg.includeColumns, cfg.excludeColumns,
-      cfg.includeColumnsRegex, cfg.excludeColumnsRegex)
 
 }

@@ -45,7 +45,8 @@ object IncrementalSemDedup {
     val ws = new BatchState.Versions(BatchState.fsOf(spark, storeDir), vecDir(storeDir), "w=")
       .committed.filter(w => applied.exists(w <= _))
     if (ws.isEmpty) throw new IllegalStateException(s"no admitted state at $storeDir")
-    ws.map(w => spark.read.parquet(s"${vecDir(storeDir)}/w=$w")).reduce(_ unionByName _)
+    // one multi-path scan: each path is its own root, so no `w` partition column appears
+    spark.read.parquet(ws.map(w => s"${vecDir(storeDir)}/w=$w"): _*)
   }
 
   /** Admit one micro-batch; returns the number of admitted vectors. */

@@ -1,32 +1,38 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /**
- * D8: run progress bookkeeping — record count, batch count, last-activity timestamp,
- * processing flag. The Spark-native form of the reference's `SyncStats` singleton
- * (`debezium_core/src/main/java/keboola/cdc/debezium/SyncStats.java:12-110`) and the
- * per-batch bookkeeping in `DbChangeConsumer.java:71-101`, driven here by the engine's
- * own `StreamingQueryListener` progress events instead of hand-rolled counters.
+ * D8: run progress bookkeeping of ONE streaming query — record count, batch count,
+ * last-activity timestamp, termination. The Spark-native form of the reference's
+ * `SyncStats` singleton (`debezium_core/src/main/java/keboola/cdc/debezium/SyncStats.java:12-110`)
+ * and the per-batch bookkeeping in `DbChangeConsumer.java:71-101`, driven here by the
+ * engine's own `StreamingQueryListener` progress events instead of hand-rolled counters.
+ *
+ * A session's listeners receive every query's events, so this one counts only the query
+ * started under `queryName` (matched at start, then by run id).
  */
-class SyncStats extends StreamingQueryListener {
+class SyncStats(val queryName: String) extends StreamingQueryListener {
   private val records = new AtomicLong(0)
   private val batches = new AtomicLong(0)
   private val lastEventMs = new AtomicLong(0)
-  private val processing = new AtomicBoolean(false)
-  private val snapshotting = new AtomicBoolean(false)
+  private val terminated = new CountDownLatch(1)
+  @volatile private var runId: UUID = null
 
-  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
-    processing.set(true)
-    // the idle clock starts at query start, not at epoch — an empty spool still waits
-    // out maxWait before stopping (reference: engine start primes the last-record time)
-    lastEventMs.compareAndSet(0, System.currentTimeMillis())
-  }
+  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+    if (e.name == queryName) {
+      runId = e.runId
+      // the idle clock starts at query start, not at epoch — an empty spool still waits
+      // out maxWait before stopping (reference: engine start primes the last-record time)
+      lastEventMs.set(System.currentTimeMillis())
+    }
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val rows = e.progress.numInputRows
-    if (rows > 0) {
+    if (e.progress.runId == runId && rows > 0) {
       records.addAndGet(rows)
       batches.incrementAndGet()
       lastEventMs.set(System.currentTimeMillis())
@@ -34,23 +40,16 @@ class SyncStats extends StreamingQueryListener {
   }
 
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-    processing.set(false)
+    if (e.runId == runId) terminated.countDown()
 
-  /** Snapshot-in-progress gate (`KeboolaNotification.java:24-34`): while an initial/blocking
-    * snapshot runs, stop conditions must NOT fire even if the stream itself is idle
-    * (`AbstractDebeziumTask.java:176-183`). Flipped by the snapshot phase of a composed run. */
-  def setSnapshotInProgress(on: Boolean): Unit = {
-    snapshotting.set(on)
-    if (!on) lastEventMs.set(System.currentTimeMillis()) // snapshot end resets the idle clock
-  }
-  def snapshotInProgress: Boolean = snapshotting.get()
+  /** Waits up to `ms` for this query's termination event, which the listener bus delivers
+    * after the query's last progress event; true once it has arrived. */
+  def awaitTerminated(ms: Long): Boolean = terminated.await(ms, TimeUnit.MILLISECONDS)
 
   def snapshot: SyncStats.Snapshot =
-    SyncStats.Snapshot(records.get(), batches.get(), lastEventMs.get(), processing.get(),
-      snapshotting.get())
+    SyncStats.Snapshot(records.get(), batches.get(), lastEventMs.get())
 }
 
 object SyncStats {
-  final case class Snapshot(records: Long, batches: Long, lastEventMs: Long, processing: Boolean,
-      snapshotInProgress: Boolean = false)
+  final case class Snapshot(records: Long, batches: Long, lastEventMs: Long)
 }

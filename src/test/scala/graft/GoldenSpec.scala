@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import graft.streaming.CdcRunner
-import graft.streaming.CdcRunner.RunConfig
+import graft.streaming.CdcRunner.{ColumnFilters, RunConfig}
 
 /**
  * Literal replica of the reference's golden dedupe case
@@ -119,7 +119,7 @@ class GoldenSpec extends SparkSpec {
       s"""{"table":"inventory.sales","op":"r","after":${payload(r)},"before":null,"source":{"ts_ms":${1000 + i}}}"""
     }.asJava)
     CdcRunner.run(spark, RunConfig(spoolDir = s"$base1/spool", workDir = s"$base1/work",
-      outDir = s"$base1/out", mode = "append", excludeColumnsRegex = exclude))
+      outDir = s"$base1/out", mode = "append", columns = ColumnFilters(excludeRegex = exclude)))
     assert(normalized(s"$base1/out/tables/inventory_sales.csv") == Seq(
       "39153,SKU1,2013-09-23 22:38:29,Cameras,708.00000,Smith,28129,Electronics,r,false,0",
       "89124,SKU2,2013-09-23 22:38:30,Televisions,1546.00000,Clark,32003,Electronics,r,false,1",
@@ -141,7 +141,7 @@ class GoldenSpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$base2/spool"))
     Files.write(Paths.get(s"$base2/spool", "000.jsonl"), events.asJava)
     CdcRunner.run(spark, RunConfig(spoolDir = s"$base2/spool", workDir = s"$base2/work",
-      outDir = s"$base2/out", mode = "append", excludeColumnsRegex = exclude))
+      outDir = s"$base2/out", mode = "append", columns = ColumnFilters(excludeRegex = exclude)))
     assert(normalized(s"$base2/out/tables/inventory_sales.csv") == Seq(
       "10001,SKU10,2023-01-01,Electronics,199.99000,New York,NY,Electronics,c,false,0",
       "90001,SKU20,2023-01-02,Books,14.99000,Los Angeles,CA,Books,c,false,1",
@@ -190,7 +190,7 @@ class GoldenSpec extends SparkSpec {
       s"""{"table":"inventory.sales","op":"r","after":$p,"before":null,"source":{"ts_ms":${1000 + i}}}"""
     }.asJava)
     CdcRunner.run(spark, RunConfig(spoolDir = s"$base1/spool", workDir = s"$base1/work",
-      outDir = s"$base1/out", mode = "append", loadType = Some("append_incremental")))
+      outDir = s"$base1/out", mode = "append_incremental"))
     assert(normalized(s"$base1/out/tables/inventory_sales.csv") == Seq(
       "Female,Mize,-1,39153,SKU1,2013-09-23 22:38:29,Cameras,708.00000,Smith,28129,Mississippi,Electronics,r,false,0",
       "Male,The Lakes,1,89124,SKU2,2013-09-23 22:38:30,Televisions,1546.00000,Clark,32003,Nevada,Electronics,r,false,1",
@@ -210,7 +210,7 @@ class GoldenSpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$base2/spool"))
     Files.write(Paths.get(s"$base2/spool", "000.jsonl"), events.asJava)
     CdcRunner.run(spark, RunConfig(spoolDir = s"$base2/spool", workDir = s"$base2/work",
-      outDir = s"$base2/out", mode = "append", loadType = Some("append_incremental")))
+      outDir = s"$base2/out", mode = "append_incremental"))
     assert(normalized(s"$base2/out/tables/inventory_sales.csv") == Seq(
       "Male,New York,1,10001,SKU10,2023-01-01,Electronics,199.99000,New York,NY,NY,Electronics,c,false,0",
       "Female,Los Angeles,5,90001,SKU20,2023-01-02,Books,14.99000,Los Angeles,CA,CA,Books,c,false,1",
@@ -473,7 +473,7 @@ class GoldenSpec extends SparkSpec {
     val spool = s"$base/spool"
     Files.createDirectories(Paths.get(spool))
     val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
-      mode = "append", loadType = Some("append_full"), readOnly = true)
+      mode = "append_full", readOnly = true)
 
     // 01: full load, two snapshot reads
     Files.write(Paths.get(spool, "000.jsonl"), Seq(

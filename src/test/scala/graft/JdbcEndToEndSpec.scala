@@ -112,7 +112,7 @@ class JdbcEndToEndSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     import graft.streaming.CdcRunner
-    import graft.streaming.CdcRunner.{RunConfig, SnapshotSource}
+    import graft.streaming.CdcRunner.{ColumnFilters, RunConfig, SnapshotSource}
     conn // force setup (ITEMS table, 10 rows: ID, NAME, PRICE)
     val base = Files.createTempDirectory("graft-snapcols").toString
     val spool = s"$base/spool"
@@ -120,7 +120,7 @@ class JdbcEndToEndSpec extends SparkSpec {
     val res = CdcRunner.runWithSnapshot(spark,
       RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
         primaryKeys = Map("app_items" -> Seq("id")),
-        excludeColumns = Map("app_items" -> Seq("price"))),
+        columns = ColumnFilters(exclude = Map("app_items" -> Seq("price")))),
       snapshotMode = "initial",
       snapshots = Seq(SnapshotSource("app.items",
         SnapshotConfig(url, "APP.ITEMS", driver = Some(DerbyDriver)))),
@@ -163,7 +163,7 @@ class JdbcEndToEndSpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$base/spool"))
     val res = CdcRunner.runWithSnapshot(spark,
       RunConfig(spoolDir = s"$base/spool", workDir = s"$base/work", outDir = s"$base/out",
-        mode = "append", loadType = Some("append_full"),
+        mode = "append_full",
         primaryKeys = Map("app_osales" -> Seq("sku"), "app_oproducts" -> Seq("id"))),
       snapshotMode = "initial",
       snapshots = Seq(

@@ -138,36 +138,41 @@ class SchemaChangesSpec extends SparkSpec {
 
 class CdcCliSpec extends AnyFunSuite {
   test("argument parsing incl. pk map and lists (§3.2)") {
-    val a = CdcCli.parseArgs(Seq(
+    val (a, cpus) = CdcCli.parseArgs(Seq(
       "--spool", "/s", "--work", "/w", "--out", "/o", "--mode", "APPEND",
       "--pk", "t1=id", "--pk", "t2=a,b", "--max-batch-bytes", "100", "--stop-at-pos", "7",
-      "--include", "x,y", "--snapshot-tables", "z"))
-    assert(a.mode == "append" && a.maxBatchBytes.contains(100L) && a.stopAtPos.contains(7L))
-    assert(a.pks == Map("t1" -> Seq("id"), "t2" -> Seq("a", "b")))
-    assert(a.include.contains(Set("x", "y")) && a.snapshotTables == Seq("z"))
+      "--include", "x,y", "--snapshot-tables", "z", "--cpus", "3"))
+    assert(a.spoolDir == "/s" && a.workDir == "/w" && a.outDir == "/o" && cpus == "3")
+    assert(a.mode == "append" && a.maxBytesPerTrigger.contains(100L) && a.stopAtPos.contains(7L))
+    assert(a.primaryKeys == Map("t1" -> Seq("id"), "t2" -> Seq("a", "b")))
+    assert(a.includeTables.contains(Set("x", "y")) && a.snapshotTables == Seq("z"))
     intercept[IllegalArgumentException](CdcCli.parseArgs(Seq("--bogus", "v")))
     intercept[IllegalArgumentException](CdcCli.parseArgs(Seq("--spool", "/s")))
+    intercept[IllegalArgumentException](CdcCli.parseArgs(Seq("--spool", "/s", "--work", "/w",
+      "--out", "/o", "--mode", "dedup")))
 
-    // --load-type implies the dedupe/append branch alongside the manifest flag
-    val ai = CdcCli.parseArgs(Seq("--spool", "/s", "--work", "/w", "--out", "/o",
+    // --load-type and --mode set the one load-type field
+    val (ai, _) = CdcCli.parseArgs(Seq("--spool", "/s", "--work", "/w", "--out", "/o",
       "--load-type", "append_incremental"))
-    assert(ai.loadType.contains("append_incremental") && ai.mode == "append")
-    val fl = CdcCli.parseArgs(Seq("--spool", "/s", "--work", "/w", "--out", "/o",
+    assert(ai.mode == "append_incremental")
+    val (fl, _) = CdcCli.parseArgs(Seq("--spool", "/s", "--work", "/w", "--out", "/o",
       "--load-type", "FULL_LOAD"))
-    assert(fl.loadType.contains("full_load") && fl.mode == "dedupe")
+    assert(fl.mode == "full_load")
 
-    val b = CdcCli.parseArgs(Seq(
+    val (b, _) = CdcCli.parseArgs(Seq(
       "--spool", "/s", "--work", "/w", "--out", "/o",
       "--signal-file", "/sig.json", "--read-only", "--max-wait-ms", "5000",
       "--stop-at-file", "b.000002", "--include-cols", "t1=id,name", "--exclude-cols", "t1=ssn"))
     assert(b.signalFile.contains("/sig.json") && b.readOnly && b.maxWaitMs.contains(5000L))
     assert(b.stopAtFile.contains("b.000002"))
-    assert(b.includeCols == Map("t1" -> Seq("id", "name")) && b.excludeCols == Map("t1" -> Seq("ssn")))
+    assert(b.columns.include == Map("t1" -> Seq("id", "name")) &&
+      b.columns.exclude == Map("t1" -> Seq("ssn")))
 
-    val c = CdcCli.parseArgs(Seq(
+    val (c, _) = CdcCli.parseArgs(Seq(
       "--spool", "/s", "--work", "/w", "--out", "/o",
       "--exclude-cols-regex", "^inventory\\.sales\\.user.*",
-      "--exclude-cols-regex", "^.*\\.secret$"))
-    assert(c.excludeColsRegex == Seq("^inventory\\.sales\\.user.*", "^.*\\.secret$"))
+      "--exclude-cols-regex", "^.*\\.secret$", "--max-duration-ms", "900", "--wire-format"))
+    assert(c.columns.excludeRegex == Seq("^inventory\\.sales\\.user.*", "^.*\\.secret$"))
+    assert(c.maxDurationMs.contains(900L) && c.wireFormat && c.mode == "dedupe")
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions.{col, count, lit, session_window, unix_millis}
 import graft.streaming.CdcRunner
-import graft.streaming.CdcRunner.RunConfig
+import graft.streaming.CdcRunner.{ColumnFilters, RunConfig}
 
 /** End-to-end bounded CDC run over a JSONL envelope spool: snapshot + updates + delete +
   * schema drift, exported as CSV/manifest/state — the Spark shape of the reference's
@@ -180,8 +180,8 @@ class StreamingSpec extends SparkSpec {
     CdcRunner.run(spark, RunConfig(
       spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
       primaryKeys = Map("f_t" -> Seq("id")),
-      includeColumns = Map("f_t" -> Seq("id", "keep", "secret")),
-      excludeColumns = Map("f_t" -> Seq("secret"))))
+      columns = ColumnFilters(include = Map("f_t" -> Seq("id", "keep", "secret")),
+        exclude = Map("f_t" -> Seq("secret")))))
     // staged parquet never contained the filtered columns (connector-level, not export-level)
     val staged = spark.read.parquet(s"$base/work/staging/f_t")
     assert(!staged.columns.contains("secret") && !staged.columns.contains("extra"))
@@ -584,22 +584,42 @@ class StreamingSpec extends SparkSpec {
     assert(res.tables == Map("i_t" -> 3L)) // all three files consumed before the idle stop
   }
 
-  test("snapshot-in-progress gates the idle stop (KeboolaNotification semantics)") {
-    import graft.streaming.SyncStats
-    val base = Files.createTempDirectory("graft-gate").toString
+  test("SyncStats counts only its run's query: a concurrent stream neither inflates records nor holds off the idle stop") {
+    val base = Files.createTempDirectory("graft-sidequery").toString
     val spool = s"$base/spool"
-    writeSpool(spool, "000.jsonl", Seq(env("g.t", "c", """{"id":1}""", null, 1)))
-    val stats = new SyncStats
-    stats.setSnapshotInProgress(true) // a snapshot is running: idle stop must NOT fire
+    writeSpool(spool, "000.jsonl", Seq(
+      env("s.t", "c", """{"id":1}""", null, 1), env("s.t", "c", """{"id":2}""", null, 2)))
+    // another query on the same session, reporting input rows every 100 ms
+    val side = spark.readStream.format("rate").option("rowsPerSecond", "50").load()
+      .writeStream.format("noop")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
+      .option("checkpointLocation", s"$base/side-ckpt").start()
+    try {
+      val t0 = System.currentTimeMillis()
+      val res = CdcRunner.run(spark, RunConfig(
+        spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+        primaryKeys = Map("s_t" -> Seq("id")), maxWaitMs = Some(1000), maxDurationMs = Some(30000)))
+      val elapsed = System.currentTimeMillis() - t0
+      assert(res.stats.records == 2L, s"records counted another query's rows: ${res.stats}")
+      assert(elapsed < 15000, s"the idle stop did not fire before maxDuration (${elapsed} ms)")
+      assert(res.tables == Map("s_t" -> 2L))
+    } finally side.stop()
+  }
+
+  test("max duration stops a run that maxWait would keep open, and its rows still export") {
+    val base = Files.createTempDirectory("graft-maxdur").toString
+    val spool = s"$base/spool"
+    val cfg = RunConfig(spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
+      primaryKeys = Map("m_t" -> Seq("id")))
+    writeSpool(spool, "000.jsonl", Seq(env("m.t", "c", """{"id":1}""", null, 1)))
+    CdcRunner.run(spark, cfg) // a first sync warms the session, so one small batch fits the cap
+    writeSpool(spool, "001.jsonl", Seq(env("m.t", "c", """{"id":2}""", null, 2)))
     val t0 = System.currentTimeMillis()
-    // release the gate after 2.2s; with maxWaitMs=500 an ungated run would stop ~0.5s
-    // after draining the one file
-    new Thread(() => { Thread.sleep(2200); stats.setSnapshotInProgress(false) }).start()
-    CdcRunner.run(spark, RunConfig(
-      spoolDir = spool, workDir = s"$base/work", outDir = s"$base/out",
-      primaryKeys = Map("g_t" -> Seq("id")), maxWaitMs = Some(500)), stats)
+    val res = CdcRunner.run(spark, cfg.copy(maxWaitMs = Some(60000), maxDurationMs = Some(1500)))
     val elapsed = System.currentTimeMillis() - t0
-    assert(elapsed >= 2200, s"idle stop fired during snapshot (elapsed ${elapsed}ms)")
+    assert(elapsed < 20000, s"the run outlived its max duration (${elapsed} ms)")
+    assert(res.tables == Map("m_t" -> 2L) && res.stats.records == 1L)
+    assert(readCsvDir(s"$base/out/tables/m_t.csv").size == 2)
   }
 
   test("empty spool and no-new-events runs complete cleanly") {
@@ -653,7 +673,7 @@ class StreamingSpec extends SparkSpec {
     val res2 = CdcRunner.run(spark, RunConfig(
       spoolDir = spool, workDir = s"$base2/work", outDir = s"$base2/out",
       primaryKeys = Map("topic_inv_items" -> Seq("id")), wireFormat = true,
-      excludeColumns = Map("topic_inv_items" -> Seq("name", "kbc__operation"))))
+      columns = ColumnFilters(exclude = Map("topic_inv_items" -> Seq("name", "kbc__operation")))))
     assert(res2.tables == Map("topic_inv_items" -> 1L))
     val staged2 = spark.read.option("mergeSchema", "true")
       .parquet(s"$base2/work/staging/topic_inv_items")
@@ -1403,6 +1423,11 @@ class StreamingSpec extends SparkSpec {
     val n2 = IncrementalSemDedup.applyBatch(far, 2L, dir, cents, eps = 0.9)
     assert(n2 == n0, s"negated distinct vectors must all admit (got $n2 vs $n0)")
     assert(IncrementalBqIndex.index(spark, dir + "/index").count() == n0 + n2)
+    // the committed waves (one of them empty) read as one scan: no wave column, no union
+    val adm = IncrementalSemDedup.admitted(spark, dir)
+    assert(adm.columns.toSeq == Seq("vec_id", "embedding") && adm.count() == n0 + n2)
+    assert(adm.queryExecution.analyzed.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.isEmpty)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -1438,7 +1463,7 @@ class StreamingSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-loadtype").toString
     writeSpool(s"$base/spool", "000.jsonl", Seq(env("l.t", "c", """{"id":1}""", null, 1)))
     val ok = RunConfig(spoolDir = s"$base/spool", workDir = "", outDir = s"$base/out")
-    val cases = Seq(ok.copy(mode = "dedup"), ok.copy(loadType = Some("full")))
+    val cases = Seq(ok.copy(mode = "dedup"), ok.copy(mode = "full"))
     for ((cfg, i) <- cases.zipWithIndex; viaSnapshot <- Seq(false, true)) {
       val work = s"$base/work_${i}_$viaSnapshot"
       val c = cfg.copy(workDir = work)
@@ -1868,12 +1893,12 @@ class StreamingSpec extends SparkSpec {
     // the table's staging path is a regular file, so the staging append fails
     Files.createDirectories(Paths.get(s"$base/work/staging"))
     Files.write(Paths.get(s"$base/work/staging/inv_sales"), "x".getBytes)
-    val stats = new graft.streaming.SyncStats
+    val before = spark.streams.listListeners().toSeq
     intercept[Exception] {
       CdcRunner.run(spark, RunConfig(spoolDir = spool, workDir = s"$base/work",
-        outDir = s"$base/out"), stats)
+        outDir = s"$base/out"))
     }
-    assert(!spark.streams.listListeners().contains(stats),
+    assert(spark.streams.listListeners().toSeq == before,
       "a failed run left its SyncStats listener registered on the session")
   }
 }

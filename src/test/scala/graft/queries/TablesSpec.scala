@@ -104,6 +104,16 @@ class TablesSpec extends SparkSpec {
     assert(after.agg(sum("w")).as[Double].head() == 4.5)
   }
 
+  test("building a query leaves the session's parquet nanos conf unset; events.ts reads as TIMESTAMP") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    val dir = copySf()
+    SparkEntry.queries("ev_sessionize")(spark, dir)
+    assert(Tables.t(spark, dir, "events").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    assert(!spark.conf.get(key).toBoolean, s"a table reference set $key")
+  }
+
   test("a missing table fails the reference") {
     val dir = Files.createTempDirectory("graft-tables-missing").toString
     val e = intercept[Exception](Tables.t(spark, dir, "absent"))
